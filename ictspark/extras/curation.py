@@ -4,14 +4,15 @@ These extend the dedup/similarity family into the operations a keep/drop
 pipeline actually runs at 100 TB:
 
 - ``dedup_components``: connected components over the MinHash-LSH candidate
-  graph by iterative min-label propagation (each round is one equi-join + one
-  groupBy; plain hash-to-min needs O(component diameter) rounds — the
-  alternating-star variants get O(log d) at the cost of extra joins; near-dup
-  clusters are shallow, so the simple iteration wins here). The loop runs to
-  convergence and RAISES if the cap is hit, so a wrong partition can never be
-  returned silently. The DuckDB oracle computes ground-truth components via
-  WITH RECURSIVE, so the hash match proves the iteration converged to the
-  true partition.
+  graph — a driver-local union-find when the graph is under the CC rail
+  (``near_dup_labels``), else iterative min-label propagation (each round is
+  one equi-join + one groupBy; plain hash-to-min needs O(component diameter)
+  rounds — the alternating-star variants get O(log d) at the cost of extra
+  joins; near-dup clusters are shallow, so the simple iteration wins here).
+  The loop runs to convergence and RAISES if the cap is hit, so a wrong
+  partition can never be returned silently. The DuckDB oracle computes
+  ground-truth components via WITH RECURSIVE, so the hash match proves the
+  iteration converged to the true partition.
 - ``stratified_sample``: deterministic hash-threshold sampling per document —
   reproducible across engines and runs (md5 prefix compare; granularity
   1/256 per hex pair). No RNG, no sampleBy seed drift.
@@ -27,10 +28,58 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ictspark.extras.dedup import MAX_SHINGLE_DF, minhash_lsh_pairs
+from ictspark.extras.dedup import MAX_SHINGLE_DF, _barrier, minhash_lsh_pairs
 
 EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 URL_RE = r"https?://[^\s]+"
+
+
+def near_dup_labels(
+    documents: DataFrame, max_df: int | None = MAX_SHINGLE_DF, max_iter: int = 100
+) -> DataFrame:
+    """(doc_id, component) for the NON-SINGLETON docs only — every doc in at
+    least one MinHash-LSH near-dup pair, labelled with the min doc_id
+    reachable in the candidate graph. A doc in no pair is its own component
+    and is absent here; callers restore it with a left join (or need only
+    the non-keepers, ``doc_id != component``).
+
+    The size-adaptive CC plan choice is made HERE, for every near-dup
+    consumer (``dedup_components``, ``dedup_keep_list``, ``curate_pipeline``
+    stage 4): the one-way pairs are persisted and counted once, and
+    ``incremental.under_cc_rail`` judges the symmetric edge count (2 ×
+    pairs — the r08 rail's unit). At or under the rail the pairs are
+    collected ONCE into the driver-local union-find (bit-identical min-id
+    fixpoint; union-find needs no symmetric copy, so none is built) and the
+    labels come back as a broadcast-hinted driver-built frame — bounded by
+    the rail, never by corpus size. Above it the symmetric edges are built
+    and the distributed ``connected_components`` fixpoint runs unchanged
+    over the edge endpoints; its labels are checkpointed (the
+    ``dedup._barrier`` rule) so no cache is left for the caller to release.
+    ``max_df`` passes through to the shingle df-cap — ``None`` gives the
+    uncapped, per-doc-pure pair definition the incremental stores use."""
+    from ictspark.extras.incremental import _local_cc, under_cc_rail
+
+    pairs = minhash_lsh_pairs(documents, max_df=max_df).select("doc_a", "doc_b").persist()
+    try:
+        n_sym = 2 * pairs.count()
+        if under_cc_rail(n_sym, n_sym):  # endpoints ≤ symmetric edge rows
+            return F.broadcast(_local_cc(documents.sparkSession, None, pairs))
+        # r10: no .distinct() on the symmetrized union — minhash_lsh_pairs
+        # rows are distinct per (doc_a, doc_b) with doc_a < doc_b, so the
+        # flipped half is disjoint from the original
+        edges = pairs.unionByName(
+            pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
+        ).persist()
+        try:
+            nodes = edges.select(F.col("doc_a").alias("doc_id")).distinct()
+            labels = connected_components(nodes, edges, max_iter)
+        finally:
+            edges.unpersist()
+        out = _barrier(labels)
+        labels.unpersist()
+        return out
+    finally:
+        pairs.unpersist()
 
 
 def dedup_components(
@@ -38,55 +87,17 @@ def dedup_components(
 ) -> DataFrame:
     """(doc_id, component) for every doc; component = min doc_id reachable in
     the MinHash-LSH near-dup candidate graph (singletons map to themselves).
-    ``max_df`` passes through to the shingle df-cap — ``None`` gives the
-    uncapped, per-doc-pure pair definition the incremental stores use."""
-    pairs = minhash_lsh_pairs(documents, max_df=max_df).select("doc_a", "doc_b").persist()
-    # r10: no .distinct() on the symmetrized union — minhash_lsh_pairs rows
-    # are distinct per (doc_a, doc_b) by construction (both paths end in a
-    # groupBy/distinct on exactly that key) and carry doc_a < doc_b, so the
-    # flipped half is disjoint from the original: the distinct was a full
-    # Exchange+HashAggregate that could never remove a row. Edge counts and
-    # CC labels are unchanged (min-agg and union-find are duplicate-proof
-    # anyway; the rail count compares the same number).
-    edges = (
-        pairs.unionByName(
-            pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-        )
-        .persist()
+    The near-dup work (pairs, rail choice, CC) is ``near_dup_labels``; this
+    left-joins its non-singleton labels onto the doc ids (a broadcast join
+    under the rail), so every singleton falls back to its own id. The
+    returned frame is lazy over that small label set — ``unpersist()`` on it
+    is a safe no-op. ``max_df`` passes through to the shingle df-cap —
+    ``None`` gives the uncapped, per-doc-pure pair definition the
+    incremental stores use."""
+    labels = near_dup_labels(documents, max_df=max_df, max_iter=max_iter)
+    return documents.select("doc_id").join(labels, "doc_id", "left").select(
+        "doc_id", F.coalesce("component", F.col("doc_id")).alias("component")
     )
-    n_edges = edges.count()  # materialize while the pairs cache is alive (one LSH pass)
-    pairs.unpersist()
-    try:
-        # r10: size-adaptive CC plan choice — the incremental store's
-        # cc_railed rule (incremental.py LOCAL_CC_MAX_EDGES rationale, r08):
-        # at or under the rail the near-dup graph folds in a driver-local
-        # union-find (bit-identical min-id fixpoint, ~ms) instead of paying
-        # O(diameter) full scheduling rounds of distributed label
-        # propagation (~0.7 s each at any corpus size — measured 6.1 s for
-        # a 514-edge graph at sf0.1/32). The collect is bounded by the rail
-        # (edge rows AND their node ids), never by corpus size; singletons
-        # never leave the cluster — they re-enter via the doc_id left join.
-        # Above the rail the distributed fixpoint runs unchanged.
-        from ictspark.extras.incremental import LOCAL_CC_MAX_EDGES, _local_cc
-
-        if n_edges <= LOCAL_CC_MAX_EDGES:
-            sub = _local_cc(documents.sparkSession, None, edges)
-            out = (
-                documents.select("doc_id")
-                .join(F.broadcast(sub), "doc_id", "left")
-                .select(
-                    "doc_id",
-                    F.coalesce("component", F.col("doc_id")).alias("component"),
-                )
-                .persist()
-            )
-            out.count()
-            return out
-        # NOTE: the returned labels frame is materialized (persisted) — the
-        # caller may .unpersist() it when done with the result
-        return connected_components(documents.select("doc_id"), edges, max_iter)
-    finally:
-        edges.unpersist()
 
 
 def connected_components(nodes: DataFrame, edges: DataFrame, max_iter: int = 100) -> DataFrame:
@@ -185,26 +196,11 @@ def dedup_keep_list(documents: DataFrame, max_df: int | None = MAX_SHINGLE_DF) -
     so the keep flags are ground-truth-checked end to end. ``max_df=None``
     gives the uncapped pair definition (per-doc-pure signatures — the form
     the incremental stores maintain and their one-shot oracles restate)."""
-    labels = dedup_components(documents, max_df=max_df)
-    out = keep_columns(labels)
-    # materialize the (small: 4 narrow cols × #docs) result eagerly, then
-    # release the labels cache dedup_components left persisted — otherwise
-    # every invocation leaks one docs-sized cached frame for the session
-    # lifetime (code-review r03); the checkpoint blocks are reclaimed by the
-    # ContextCleaner once the returned frame is unreferenced.
-    # Checkpoint reliability (ADVICE r03): localCheckpoint blocks live on
-    # executors, so on a real cluster an executor loss would make the frame
-    # unrecoverable mid-query — when the session has a RELIABLE checkpoint
-    # dir configured (sc.setCheckpointDir on HDFS/object storage, the normal
-    # cluster setup), use a reliable checkpoint instead; localCheckpoint
-    # stays the local/test path only.
-    sc = documents.sparkSession.sparkContext
-    if sc.getCheckpointDir() is not None:
-        out = out.checkpoint(eager=True)
-    else:
-        out = out.localCheckpoint(eager=True)
-    labels.unpersist()
-    return out
+    # materialized (small: 4 narrow cols × #docs) under the shared barrier
+    # rule — a RELIABLE checkpoint when the session has a checkpoint dir
+    # (ADVICE r03: localCheckpoint blocks die with their executor), else a
+    # localCheckpoint; the ContextCleaner reclaims it once unreferenced
+    return _barrier(keep_columns(dedup_components(documents, max_df=max_df)))
 
 
 def corpus_mix(documents: DataFrame) -> DataFrame:
@@ -666,9 +662,14 @@ def curate_pipeline(
                          unchanged;
       3. 'exact_dup'     non-keeper of an md5(lower(trim(text))) group
                          among stage-2 survivors (keeper = min doc_id);
-      4. 'near_dup'      dedup_keep_list over stage-3 survivors — MinHash-
-                         LSH candidates → connected components → min-id
-                         keeper; computed on survivors, so a cluster whose
+      4. 'near_dup'      non-keeper of a near-dup component among stage-3
+                         survivors — ``near_dup_labels``: MinHash-LSH
+                         candidates → connected components (driver union-
+                         find under the CC rail) → the non-singleton labels
+                         only; a doc drops iff doc_id != component (the min
+                         id), and the survivors are stage 3 anti-joined
+                         with that small drop list (broadcast under the
+                         rail). Computed on survivors, so a cluster whose
                          lowest-id member was already dropped elects a new
                          keeper instead of silently dropping everyone.
                          ``near_dup_max_df`` passes through to the shingle
@@ -765,11 +766,14 @@ def curate_pipeline(
         RELIABLE checkpoint when the session has one configured (the real-
         cluster setup — at 100 TB these barriers are the stage outputs a
         multi-stage pipeline persists to storage anyway), localCheckpoint
-        otherwise (local/test path)."""
+        otherwise (local/test path). Lazy, like ``pipeline._barrier``: the
+        frame materializes inside its first consumer's job instead of a
+        count job of its own (the lineage is still cut for every later
+        consumer)."""
         sc = documents.sparkSession.sparkContext
         if sc.getCheckpointDir() is not None:
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=True)
+            return df.checkpoint(eager=False)
+        return df.localCheckpoint(eager=False)
 
     doc_cols = documents.columns
     # r10: quality is a per-row projection — attach it as a column instead
@@ -814,11 +818,14 @@ def curate_pipeline(
     )
     s3 = _ckpt(s2k.where(F.col("doc_id") == F.col("keeper")).select(*doc_cols))
 
-    nd = dedup_keep_list(s3, max_df=near_dup_max_df)
-    drops_near = nd.where(~F.col("keep")).select(
+    # only the non-singleton labels: a doc drops iff it is not the min id of
+    # its component, and every other stage-3 survivor passes (anti-join
+    # against the small drop list — broadcast under the CC rail)
+    nd = near_dup_labels(s3, max_df=near_dup_max_df)
+    drops_near = nd.where(F.col("doc_id") != F.col("component")).select(
         "doc_id", F.lit("near_dup").alias("drop_reason")
     )
-    s4 = s3.join(nd.where(F.col("keep")).select("doc_id"), "doc_id")
+    s4 = s3.join(drops_near.select("doc_id"), "doc_id", "left_anti")
 
     # benchmark shingles from the full benchmark frame (the dropped benchmark
     # docs still define contamination); train side = stage-4 survivors; both

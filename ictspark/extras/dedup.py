@@ -315,10 +315,11 @@ def minhash_signatures(
             .where(F.col("df") <= max_df)
             .drop("df")
         )
+    # each aggregate is parsed from ONE SQL string (one py4j call): the
+    # same expression built from Column operators costs ~100 py4j round
+    # trips per permutation, ~4k per call at the auto-sized k=42
     aggs = [
-        F.min(
-            (F.lit(a) * F.col("hi") + F.lit(b) * F.col("lo") + F.lit(c)) % F.lit(MH_PRIME)
-        ).alias(f"mh{i}")
+        F.expr(f"min(({a} * hi + {b} * lo + {c}) % {MH_PRIME}) AS mh{i}")
         for i, (a, b, c) in enumerate(mh_coeffs(k))
     ]
     return hv.groupBy("doc_id").agg(*aggs)
@@ -386,11 +387,14 @@ def minhash_lsh_pairs(
     # aggregation — 42 auto-sized bands made that 42 shingle-groupBy jobs
     # where one suffices (observed 23 s → ~5 s at sf0.1). posexplode keeps
     # the same (doc_id, band, bkey) rows from a single scan of sig.
-    band_keys = F.array(
-        *[
-            F.concat_ws("|", *[F.col(f"mh{i}") for i in range(b * r, (b + 1) * r)])
+    # one SQL string for the whole key array (one py4j call, not ~bands×r)
+    band_keys = F.expr(
+        "array("
+        + ", ".join(
+            "concat_ws('|', " + ", ".join(f"mh{i}" for i in range(b * r, (b + 1) * r)) + ")"
             for b in range(bands)
-        ]
+        )
+        + ")"
     )
     buckets = sig.select("doc_id", F.posexplode(band_keys).alias("band", "bkey"))
     a = buckets.alias("a")
@@ -448,6 +452,9 @@ def minhash_lsh_pairs(
     return out.where(F.col("est_jaccard") >= threshold)
 
 
+# per-task token→digest memo bound for ``simhash``: a task over a corpus
+# with an open vocabulary would otherwise hold every distinct token it saw
+_SIMHASH_MEMO_MAX = 1 << 16  # ~10 MB of digests per Python worker
 N_SIMHASH_BITS = 64  # r04 (VERDICT r03 item 1a): was 16 — see simhash_pairs
 _HALF_BITS = 32  # stored as two non-negative 32-bit halves (engine-portable:
 # a single 64-bit value needs bit 63, and DuckDB's `<<` overflow-checks while
@@ -467,8 +474,9 @@ def simhash(documents: DataFrame) -> DataFrame:
     cost center): the WHOLE signature is one ``mapInArrow`` map stage —
     per doc, the distinct token set (same lower/split-' '/drop-empties
     tokenization), two hashlib md5 digests per distinct token (memoized
-    per task: the vocabulary is corpus-bounded, so a reused worker hashes
-    each token once), and a vectorized NumPy nibble-parity majority vote.
+    per task, cleared whenever it reaches ``_SIMHASH_MEMO_MAX`` entries so
+    an open vocabulary cannot grow it without bound), and a vectorized
+    NumPy nibble-parity majority vote.
     ZERO Exchanges where the former plan paid a vocab DISTINCT shuffle, a
     broadcast join and a 64-column aggregation (measured 1.9 s → 0.4 s
     warm / 6.0 s → 2.2 s cold at sf0.1/32); rows proved identical with
@@ -480,6 +488,7 @@ def simhash(documents: DataFrame) -> DataFrame:
     if d.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism:
         d = d.repartition(spark.sparkContext.defaultParallelism, "doc_id")
     id_t = d.schema["doc_id"].dataType.simpleString()
+    memo_max = _SIMHASH_MEMO_MAX
 
     def _batches(it):
         import hashlib
@@ -496,6 +505,8 @@ def simhash(documents: DataFrame) -> DataFrame:
                     hashlib.md5(tok.encode("utf-8")).digest(),
                     hashlib.md5((tok + "#hi").encode("utf-8")).digest(),
                 )
+                if len(cache) >= memo_max:
+                    cache.clear()  # bounded per-task state; a miss only re-hashes
                 cache[tok] = r
             return r
 

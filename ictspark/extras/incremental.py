@@ -218,16 +218,26 @@ def cc_railed(
     bit-identical fixpoints. Callers pass the counts they already know —
     the rail is checked on BOTH dimensions so a bulk backfill with many
     singleton nodes can never trigger an unbounded collect."""
-    if max(n_nodes, n_sym) <= LOCAL_CC_MAX_EDGES:
+    if under_cc_rail(n_nodes, n_sym):
         return _local_cc(spark, nodes, sym)
     return connected_components(nodes, sym)
 
 
-def _local_cc(spark: SparkSession, nodes: DataFrame, sym: DataFrame) -> DataFrame:
+def under_cc_rail(n_nodes: int, n_sym: int) -> bool:
+    """The driver-local CC rail, in one place for every CC caller: true iff
+    BOTH the node count and the symmetric edge-row count are at or under
+    LOCAL_CC_MAX_EDGES (read at call time, so tests can force either
+    path)."""
+    return max(n_nodes, n_sym) <= LOCAL_CC_MAX_EDGES
+
+
+def _local_cc(spark: SparkSession, nodes: DataFrame | None, edges: DataFrame) -> DataFrame:
     """Driver-local union-find over a size-railed contracted subgraph —
     bit-identical to ``connected_components``'s min-label fixpoint (union
     roots merge toward the smaller id, so every root IS its component's min
-    node id). Only ever called under LOCAL_CC_MAX_EDGES.
+    node id). Only ever called under LOCAL_CC_MAX_EDGES. ``edges`` are
+    (doc_a, doc_b) rows in either or both directions — union-find needs no
+    symmetric copy. ``nodes=None`` labels exactly the edge endpoints.
 
     Driver-memory budget (VERDICT r08 blemish 2): rows cross as Arrow
     batches and land in flat int64 numpy buffers — ids are compacted to
@@ -243,16 +253,16 @@ def _local_cc(spark: SparkSession, nodes: DataFrame, sym: DataFrame) -> DataFram
     import pandas as pd
 
     if nodes is None:
-        # r10: callers whose node set IS the edge-endpoint set (the
-        # dedup_components rail — singletons re-enter via a left join) skip
-        # the second collect job; np.unique over the endpoints covers them
+        # r10: callers whose node set IS the edge-endpoint set
+        # (curation.near_dup_labels — singletons re-enter via a left join)
+        # skip the second collect job; np.unique over the endpoints covers them
         node_ids = np.empty(0, dtype=np.int64)
     else:
         id_col = nodes.columns[0]
         node_ids = nodes.select(id_col).toArrow().column(0).to_numpy()
-    edges = sym.select("doc_a", "doc_b").toArrow()
-    ea = edges.column(0).to_numpy()
-    eb = edges.column(1).to_numpy()
+    rows = edges.select("doc_a", "doc_b").toArrow()
+    ea = rows.column(0).to_numpy()
+    eb = rows.column(1).to_numpy()
     ids = np.unique(np.concatenate([node_ids, ea, eb])).astype(np.int64)
     ia = np.searchsorted(ids, ea)
     ib = np.searchsorted(ids, eb)

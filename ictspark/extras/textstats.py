@@ -437,6 +437,7 @@ def winnow_selected(documents: DataFrame, k: int = 8, w: int = 16) -> DataFrame:
     par = spark.sparkContext.defaultParallelism
     if d.rdd.getNumPartitions() < par:
         d = d.repartition(par, "doc_id")
+    id_t = d.schema["doc_id"].dataType.simpleString()
 
     def _batches(it):
         import hashlib
@@ -444,13 +445,11 @@ def winnow_selected(documents: DataFrame, k: int = 8, w: int = 16) -> DataFrame:
 
         import pyarrow as pa
 
-        out_schema = pa.schema([("doc_id", pa.int64()), ("fp", pa.string())])
         for batch in it:
-            ids = batch.column("doc_id").to_pylist()
             texts = batch.column("text").to_pylist()
-            o_ids: list[int] = []
+            o_idx: list[int] = []
             o_fps: list[str] = []
-            for did, txt in zip(ids, texts):
+            for row, txt in enumerate(texts):
                 n = max(len(txt) - (k - 1), 1)
                 hs = [
                     hashlib.md5(txt[p : p + k].encode("utf-8")).hexdigest()
@@ -471,14 +470,19 @@ def winnow_selected(documents: DataFrame, k: int = 8, w: int = 16) -> DataFrame:
                         dq.popleft()
                     fps.add(rev[dq[0]])
                 for fp in sorted(fps):
-                    o_ids.append(did)
+                    o_idx.append(row)
                     o_fps.append(fp)
+            # ids pass through with the input's own Arrow type (the id_t rule
+            # of the sibling mapInArrow stages), never a hardcoded bigint
             yield pa.RecordBatch.from_arrays(
-                [pa.array(o_ids, pa.int64()), pa.array(o_fps, pa.string())],
-                schema=out_schema,
+                [
+                    batch.column("doc_id").take(pa.array(o_idx, pa.int64())),
+                    pa.array(o_fps, pa.string()),
+                ],
+                names=["doc_id", "fp"],
             )
 
-    return d.mapInArrow(_batches, "doc_id bigint, fp string")
+    return d.mapInArrow(_batches, f"doc_id {id_t}, fp string")
 
 
 def winnow_fingerprint(documents: DataFrame, k: int = 8, w: int = 16) -> DataFrame:

@@ -81,6 +81,14 @@ def test_simhash_is_64bit_in_two_halves(docs):
     assert s.where(F.col("sim_hi") == F.col("sim_lo")).count() == 0
 
 
+def test_simhash_memo_cap_keeps_signatures(docs, monkeypatch):
+    """The per-task token-digest memo is bounded: clearing it at a tiny cap
+    (constant re-hashing) must give the same signatures as the default."""
+    want = sorted(map(tuple, dedup.simhash(docs).collect()))
+    monkeypatch.setattr(dedup, "_SIMHASH_MEMO_MAX", 2)
+    assert sorted(map(tuple, dedup.simhash(docs).collect())) == want
+
+
 def test_ann_bruteforce_shape(emb):
     r = similarity.ann_bruteforce(emb)
     per_q = r.groupBy("q_id").count().collect()
@@ -779,6 +787,28 @@ def test_winnow_fingerprint_properties(spark):
     assert not (sets[0] & sets[2])
 
 
+def test_winnow_selected_keeps_input_id_type(spark):
+    """winnow_selected takes doc_id's type from its input (the id_t rule of
+    the sibling mapInArrow stages): an int-typed id comes back int, with the
+    same rows a bigint-typed id gives."""
+    from ictspark.extras import textstats
+
+    rows = [
+        (1, "this long shared passage survives winnowing intact"),
+        (2, "and this long shared passage survives winnowing intact too"),
+        (3, None),
+    ]
+    ints = spark.createDataFrame(rows, "doc_id int, text string")
+    longs = spark.createDataFrame(rows, "doc_id long, text string")
+    got = textstats.winnow_selected(ints, k=8, w=4)
+    assert got.schema["doc_id"].dataType.simpleString() == "int"
+    want = textstats.winnow_selected(longs, k=8, w=4)
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+    pairs = dedup.winnow_reuse_pairs(ints, k=8, w=4)
+    assert pairs.schema["doc_a"].dataType.simpleString() == "int"
+    assert [(r["doc_a"], r["doc_b"]) for r in pairs.collect()] == [(1, 2)]
+
+
 def test_unigram_logprob_orders_rare_below_common(spark):
     """Corpus-LM score: a doc of corpus-rare tokens must score below a doc of
     corpus-common tokens; every doc gets a finite negative score."""
@@ -1110,6 +1140,54 @@ def test_curation_manifest_composes(spark):
         assert rows_out[did]["seq_off"] == start % curation.PACK_WINDOW
         start_by_src[src] = start + ntok
     m.unpersist()
+
+
+def test_curate_pipeline_distributed_cc_path(docs, monkeypatch):
+    """Force the near-dup stage above the CC rail: the distributed
+    connected_components fixpoint must run and give the railed
+    (driver union-find) manifest row for row."""
+    from ictspark.extras import curation, incremental
+
+    want = sorted(tuple(r) for r in curation.curate_pipeline(docs).collect())
+    assert any(r[4] == "near_dup" for r in want)  # the stage fires on the fixture
+    calls = []
+    real_cc = curation.connected_components
+
+    def spy(*a, **kw):
+        calls.append(1)
+        return real_cc(*a, **kw)
+
+    monkeypatch.setattr(curation, "connected_components", spy)
+    monkeypatch.setattr(incremental, "LOCAL_CC_MAX_EDGES", -1)
+    got = sorted(tuple(r) for r in curation.curate_pipeline(docs).collect())
+    assert calls, "the rail did not send the graph down the distributed path"
+    assert got == want
+
+
+def test_curate_pipeline_job_count_pinned(spark, docs):
+    """Spark jobs of one curate_pipeline call on the sf0.01 fixture, read
+    from the status tracker before and after. The call itself (near-dup
+    decision, plus the map stages AQE runs when the lazy barriers are
+    declared) is deterministic and pinned exactly, so a barrier added later
+    fails here; the caller's collect varies by up to two jobs with AQE's
+    stage-completion order, so the total is pinned as a ceiling."""
+    from ictspark.extras import curation
+
+    docs.count()  # the fixture cache is built outside the measured call
+    sc = spark.sparkContext
+    tracker, bus = sc.statusTracker(), sc._jsc.sc().listenerBus()
+
+    def job_ids() -> set[int]:
+        bus.waitUntilEmpty()
+        return set(tracker.getJobIdsForGroup())
+
+    before = job_ids()
+    manifest = curation.curate_pipeline(docs)
+    built = job_ids()
+    manifest.collect()
+    after = job_ids()
+    assert len(built - before) == 26, len(built - before)
+    assert len(after - before) <= 39, len(after - before)
 
 
 def test_ngram_brute_guard(spark, docs):
