@@ -32,11 +32,9 @@ oracle): N-batch ingest == one-shot ``curation.dsir_weights`` over the
 union raw corpus against the same target, bit for bit (same rounding), any
 split and arrival order — both distributions are pure multiset sums.
 
-Journal protocol: ``checkpoint.Lineage``; init commits the target's
-content signature + bucket sizing; each ingest writes its two partitions
-then ONE commit line (overwrite-idempotent on retry); committed batch ids
-skip idempotently; content drift, duplicate/re-pushed doc_ids, and sizing
-mismatches raise.
+Store identity: the ``__init__`` journal entry (``extras.store``) commits
+the target's content signature and bucket sizing; each ingest writes its two
+partitions, then one commit line.
 """
 
 from __future__ import annotations
@@ -47,31 +45,13 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ictspark.checkpoint import Lineage
-from ictspark.extras import incremental
+from ictspark.extras import store
 from ictspark.extras.curation import DSIR_BUCKETS
 
 DSIR_STORE_FORMAT = "d1"
-INIT_PARTITION = "__init__"
 
 _FEAT_SCHEMA = "doc_id long, b long, c long"
 _DELTA_SCHEMA = "b long, c long"
-
-
-def _lineage(store_dir: str) -> Lineage:
-    return Lineage(os.path.join(store_dir, "_ck"))
-
-
-def _part(store_dir: str, what: str, batch_id: str) -> str:
-    return os.path.join(store_dir, what, f"batch={batch_id}")
-
-
-def _read_parts(
-    spark: SparkSession, store_dir: str, what: str, batch_ids: list[str], schema: str
-) -> DataFrame:
-    return spark.read.schema(schema).parquet(
-        *[_part(store_dir, what, b) for b in batch_ids]
-    )
 
 
 def _doc_feats(docs: DataFrame, n_buckets: int) -> DataFrame:
@@ -94,17 +74,13 @@ def init_store(
     """Freeze the target distribution: its per-bucket counts (≤ n_buckets
     rows) and the sizing are the store's immutable identity. Idempotent
     under identical inputs; drift raises."""
-    n, nd, sig_str = incremental._input_sig(target_docs)
+    n, nd, sig_str = store.input_sig(target_docs)
     if nd != n:
         raise ValueError(
             f"target set contains duplicate doc_ids ({n} rows, {nd} distinct)"
         )
-    lin = _lineage(store_dir)
-    prior = None
-    for e in incremental._committed(lin.entries()):
-        if e["partition"] == INIT_PARTITION:
-            prior = e
-            break
+    journal = store.Journal(store_dir)
+    prior = journal.init
     params = {
         "target_sig": sig_str,
         "n_buckets": n_buckets,
@@ -123,8 +99,17 @@ def init_store(
     tf.groupBy("b").agg(F.sum("c").alias("c")).write.mode("overwrite").parquet(
         os.path.join(store_dir, "target")
     )
-    lin.commit(INIT_PARTITION, rows=n, input_sig=sig_str, **params)
+    journal.commit(store.INIT_PARTITION, rows=n, input_sig=sig_str, **params)
     return {"skipped": False, "n_target": n}
+
+
+def _require_init(journal: store.Journal, store_dir: str) -> None:
+    if journal.init is None:
+        raise ValueError(
+            f"dsir store {store_dir!r} is not initialized — call init_store with "
+            "the target set first (it defines the distribution every future "
+            "batch is scored against)"
+        )
 
 
 def ingest_batch(batch_docs: DataFrame, store_dir: str, batch_id: str) -> dict:
@@ -133,45 +118,21 @@ def ingest_batch(batch_docs: DataFrame, store_dir: str, batch_id: str) -> dict:
     O(batch) text work; the only stored read is the doc_id-pruned
     re-push guard."""
     spark = batch_docs.sparkSession
-    lin = _lineage(store_dir)
-    entries = incremental._committed(lin.entries())
-    init = next((e for e in entries if e["partition"] == INIT_PARTITION), None)
-    if init is None:
-        raise ValueError(
-            f"dsir store {store_dir!r} is not initialized — call init_store with "
-            "the target set first (it defines the distribution every future "
-            "batch is scored against)"
-        )
+    batch = store.open_batch(
+        batch_docs,
+        store_dir,
+        batch_id,
+        DSIR_STORE_FORMAT,
+        identity=lambda j: _require_init(j, store_dir),
+    )
+    if batch.skipped:
+        return {"batch": batch_id, "skipped": True, "n_docs": batch.n}
+    init = batch.journal.init
     n_buckets = int(init["n_buckets"])
-    committed = [e for e in entries if e["partition"] != INIT_PARTITION]
-    n_docs, n_distinct, sig_str = incremental._input_sig(batch_docs)
-    for e in committed:
-        if e["partition"] == batch_id:
-            if e.get("input_sig") != sig_str:
-                raise ValueError(
-                    f"batch {batch_id!r} already committed with different content "
-                    f"(stored {e.get('input_sig')}, got {sig_str}): batch ids are "
-                    "immutable — use a new id for new data"
-                )
-            return {"batch": batch_id, "skipped": True, "n_docs": n_docs}
-    if n_distinct != n_docs:
-        raise ValueError(
-            f"batch {batch_id!r} contains duplicate doc_ids "
-            f"({n_docs} rows, {n_distinct} distinct): doc_ids must be unique"
-        )
-    prior = [e["partition"] for e in committed]
+    prior = batch.journal.ids
     if prior:
-        stored = _read_parts(spark, store_dir, "feats", prior, _FEAT_SCHEMA)
-        n_overlap = (
-            batch_docs.select("doc_id")
-            .join(stored.select("doc_id").distinct(), "doc_id", "left_semi")
-            .count()
-        )
-        if n_overlap:
-            raise ValueError(
-                f"batch {batch_id!r} re-pushes {n_overlap} doc_ids already in the "
-                "store: doc_ids must be globally unique across batches"
-            )
+        stored = store.read_parts(spark, store_dir, "feats", prior, _FEAT_SCHEMA)
+        store.reject_repush(batch_docs, stored.select("doc_id").distinct(), batch_id)
     t0 = time.time()
     real = _doc_feats(batch_docs, n_buckets)
     # ADVICE r09: a token-less doc emits ZERO feature rows, so its doc_id
@@ -193,20 +154,20 @@ def ingest_batch(batch_docs: DataFrame, store_dir: str, batch_id: str) -> dict:
         )
     )
     feats = real.unionByName(sentinels).localCheckpoint(eager=True)
-    feats.write.mode("overwrite").parquet(_part(store_dir, "feats", batch_id))
+    feats.write.mode("overwrite").parquet(store.part(store_dir, "feats", batch_id))
     (
         feats.where(F.col("b") >= 0)
         .groupBy("b")
         .agg(F.sum("c").alias("c"))
         .write.mode("overwrite")
-        .parquet(_part(store_dir, "delta", batch_id))
+        .parquet(store.part(store_dir, "delta", batch_id))
     )
     n_feat_rows = feats.where(F.col("b") >= 0).count()
     feats.unpersist()
-    lin.commit(
+    batch.journal.commit(
         batch_id,
-        rows=n_docs,
-        input_sig=sig_str,
+        rows=batch.n,
+        input_sig=batch.sig,
         format=DSIR_STORE_FORMAT,
         n_buckets=n_buckets,
         target_sig=init["target_sig"],
@@ -216,7 +177,7 @@ def ingest_batch(batch_docs: DataFrame, store_dir: str, batch_id: str) -> dict:
     return {
         "batch": batch_id,
         "skipped": False,
-        "n_docs": n_docs,
+        "n_docs": batch.n,
         "n_feat_rows": n_feat_rows,
     }
 
@@ -227,12 +188,11 @@ def weights_read(spark: SparkSession, store_dir: str) -> DataFrame:
     distribution folds from the per-batch deltas (≤ n_buckets rows per
     batch — FIXED-SIZE regardless of corpus), the smoothed log-ratio table
     broadcasts, and the stored integer counts score without any text."""
-    lin = _lineage(store_dir)
-    entries = incremental._committed(lin.entries())
-    init = next((e for e in entries if e["partition"] == INIT_PARTITION), None)
+    journal = store.Journal(store_dir)
+    init = journal.init
     if init is None:
         raise ValueError(f"dsir store {store_dir!r} is not initialized")
-    batches = [e["partition"] for e in entries if e["partition"] != INIT_PARTITION]
+    batches = journal.ids
     if not batches:
         raise ValueError(f"dsir store {store_dir!r} has no committed batches")
     n_buckets = int(init["n_buckets"])
@@ -240,7 +200,7 @@ def weights_read(spark: SparkSession, store_dir: str) -> DataFrame:
         os.path.join(store_dir, "target")
     ).withColumnRenamed("c", "ct")
     rcnt = (
-        _read_parts(spark, store_dir, "delta", batches, _DELTA_SCHEMA)
+        store.read_parts(spark, store_dir, "delta", batches, _DELTA_SCHEMA)
         .groupBy("b")
         .agg(F.sum("c").alias("cr"))
     )
@@ -258,7 +218,7 @@ def weights_read(spark: SparkSession, store_dir: str) -> DataFrame:
             ).alias("lr"),
         )
     )
-    feats = _read_parts(spark, store_dir, "feats", batches, _FEAT_SCHEMA).where(
+    feats = store.read_parts(spark, store_dir, "feats", batches, _FEAT_SCHEMA).where(
         F.col("b") >= 0  # drop the token-less-doc registry sentinels (ingest)
     )
     return (
@@ -271,93 +231,31 @@ def weights_read(spark: SparkSession, store_dir: str) -> DataFrame:
     )
 
 
-def ingest_stream(
-    stream_docs: DataFrame,
-    store_dir: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-):
-    """The DSIR store's raw-side ingest AS A STREAM — ``foreachBatch`` with
-    ``batch_id = f"s{epoch_id:09d}"``, the ``incremental.ingest_stream``
-    pattern shared by all four journaled stores: Spark replays a failed
-    epoch under the same epoch id, the journal's idempotent skip absorbs
-    the retry, and a torn ingest redoes its overwrite-idempotent partition
-    writes before the single commit line. The store must already be
-    initialized with its target set (``init_store``) — the target is the
-    store's identity, not stream payload; ``ingest_batch`` raises loudly
-    on the first epoch otherwise. Empty micro-batches return without
-    touching the journal."""
-
-    def _sink(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        ingest_batch(batch_df, store_dir, f"s{epoch_id:09d}")
-
-    writer = (
-        stream_docs.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+def _demo_store(documents: DataFrame) -> str:
+    """Target = the doc_id%5==0 split (the dsir_weights registry
+    convention), the raw rest arriving as ``store.DEMO_BATCHES`` interleaved
+    batches into the content-keyed demo store — the same dir for both demo
+    entries, so they share one store when both run."""
+    return store.demo_store(
+        "dsir",
+        documents.where(F.col("doc_id") % 5 != 0),
+        ingest_batch,
+        f"fmt{DSIR_STORE_FORMAT}",
+        init=lambda d: init_store(documents.where(F.col("doc_id") % 5 == 0), d),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
-def incremental_dsir_demo(
-    spark: SparkSession,
-    documents: DataFrame,
-    n_batches: int = 3,
-    store_dir: str | None = None,
-) -> DataFrame:
-    """The graded driver entry (``dsir_weights_incremental``): target =
-    the doc_id%5==0 split (the dsir_weights registry convention), the raw
-    rest arriving in ``n_batches`` interleaved batches; returns the
-    standing weights. Oracle = the one-shot ``dsir_weights`` SQL over the
-    union. Content-keyed /tmp store dir (the established demo scheme)."""
-    import hashlib
-    import tempfile
-
-    target = documents.where(F.col("doc_id") % 5 == 0)
-    raw = documents.where(F.col("doc_id") % 5 != 0)
-    store = store_dir
-    if store is None:
-        _, _, sig_str = incremental._input_sig(documents)
-        key = hashlib.md5(
-            f"{sig_str}|{n_batches}|fmt{DSIR_STORE_FORMAT}|pid{os.getpid()}".encode()
-        ).hexdigest()[:12]
-        store = os.path.join(tempfile.gettempdir(), f"ictspark_dsir_demo_{key}")
-    init_store(target, store)
-    for i in range(n_batches):
-        ingest_batch(raw.where(F.col("doc_id") % n_batches == i), store, f"b{i:03d}")
-    return weights_read(spark, store)
+def incremental_dsir_demo(spark: SparkSession, documents: DataFrame) -> DataFrame:
+    """The graded driver entry (``dsir_weights_incremental``): the standing
+    weights. Oracle = the one-shot ``dsir_weights`` SQL over the union."""
+    return weights_read(spark, _demo_store(documents))
 
 
-def incremental_select_demo(
-    spark: SparkSession,
-    documents: DataFrame,
-    n_batches: int = 3,
-    store_dir: str | None = None,
-) -> DataFrame:
-    """The graded ``dsir_select_incremental`` entry: same splits and store
-    scheme as ``incremental_dsir_demo`` (the two demos share a store when
-    both run — same content key), returning the standing SELECTION.
-    Oracle = the one-shot ``dsir_select`` SQL over the union."""
-    import hashlib
-    import tempfile
-
-    target = documents.where(F.col("doc_id") % 5 == 0)
-    raw = documents.where(F.col("doc_id") % 5 != 0)
-    store = store_dir
-    if store is None:
-        _, _, sig_str = incremental._input_sig(documents)
-        key = hashlib.md5(
-            f"{sig_str}|{n_batches}|fmt{DSIR_STORE_FORMAT}|pid{os.getpid()}".encode()
-        ).hexdigest()[:12]
-        store = os.path.join(tempfile.gettempdir(), f"ictspark_dsir_demo_{key}")
-    init_store(target, store)
-    for i in range(n_batches):
-        ingest_batch(raw.where(F.col("doc_id") % n_batches == i), store, f"b{i:03d}")
-    return select_read(spark, store)
+def incremental_select_demo(spark: SparkSession, documents: DataFrame) -> DataFrame:
+    """The graded ``dsir_select_incremental`` entry: the standing SELECTION
+    over the same store. Oracle = the one-shot ``dsir_select`` SQL over the
+    union."""
+    return select_read(spark, _demo_store(documents))
 
 
 def select_read(

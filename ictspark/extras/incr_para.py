@@ -30,13 +30,9 @@ oracle): N-batch ingest == ``dedup.paragraph_dedup`` over the union corpus,
 bit for bit, any split and arrival order — keeper election is a pure min
 over an arrival-order-free set.
 
-Journal protocol: one ``checkpoint.Lineage`` journal per store; each ingest
-writes its three immutable ``batch=<id>`` partitions (occurrences, min
-delta, doc registry) then flips them live with ONE commit line —
-overwrite-idempotent on retry, so a torn ingest redoes cleanly. Re-ingesting
-a committed batch id is a no-op; content drift under a reused id,
-duplicate doc_ids within a batch, and re-pushed doc_ids across batches all
-raise (the signature-store guard battery).
+Each ingest writes three immutable ``batch=<id>`` partitions (occurrences,
+min delta, doc registry), then one commit line (``extras.store``); the doc
+registry backs the re-push guard.
 
 Scale shape at 100 TB: ingest is a pure map + one narrow per-batch
 pre-aggregation; the read path's keeper fold shuffles one row per
@@ -49,39 +45,18 @@ driver-side state.
 
 from __future__ import annotations
 
-import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ictspark.checkpoint import Lineage
-from ictspark.extras import incremental
+from ictspark.extras import store
 
 PARA_STORE_FORMAT = "p1"
 
 _OCC_SCHEMA = "doc_id long, para_idx int, h string, para string"
 _MIN_SCHEMA = "h string, fdoc long, fidx int"
 _DOC_SCHEMA = "doc_id long, n_paras long"
-
-
-def _lineage(store_dir: str) -> Lineage:
-    return Lineage(os.path.join(store_dir, "_ck"))
-
-
-def _part(store_dir: str, what: str, batch_id: str) -> str:
-    return os.path.join(store_dir, what, f"batch={batch_id}")
-
-
-def _read_parts(
-    spark: SparkSession, store_dir: str, what: str, batch_ids: list[str], schema: str
-) -> DataFrame:
-    """Read the given immutable batch partitions with the EXPLICIT schema —
-    an all-empty batch writes a data-file-less dir in no case here (plain
-    per-batch dirs, not partitionBy), but the explicit schema keeps an
-    empty-parquet read well-typed regardless (the ADVICE r08 lesson)."""
-    paths = [_part(store_dir, what, b) for b in batch_ids]
-    return spark.read.schema(schema).parquet(*paths)
 
 
 def _segments(batch_docs: DataFrame) -> DataFrame:
@@ -107,42 +82,16 @@ def ingest_batch(batch_docs: DataFrame, store_dir: str, batch_id: str) -> dict:
     immutable partition writes, one journal commit. O(batch) — no stored
     read anywhere on the ingest path."""
     spark = batch_docs.sparkSession
-    lin = _lineage(store_dir)
-    entries = incremental._committed(lin.entries())
-    n_docs, n_distinct, sig_str = incremental._input_sig(batch_docs)
-    for e in entries:
-        if e.get("format") != PARA_STORE_FORMAT:
-            raise ValueError(
-                f"store {store_dir!r} has layout {e.get('format')!r}; this code "
-                f"writes {PARA_STORE_FORMAT!r} — rebuild the store"
-            )
-        if e["partition"] == batch_id:
-            if e.get("input_sig") != sig_str:
-                raise ValueError(
-                    f"batch {batch_id!r} already committed with different content "
-                    f"(stored {e.get('input_sig')}, got {sig_str}): batch ids are "
-                    "immutable — use a new id for new data"
-                )
-            return {"batch": batch_id, "skipped": True, "n_docs": n_docs}
-    if n_distinct != n_docs:
-        raise ValueError(
-            f"batch {batch_id!r} contains duplicate doc_ids "
-            f"({n_docs} rows, {n_distinct} distinct): doc_ids must be unique"
-        )
-    prior = [e["partition"] for e in entries]
+    batch = store.open_batch(batch_docs, store_dir, batch_id, PARA_STORE_FORMAT)
+    if batch.skipped:
+        return {"batch": batch_id, "skipped": True, "n_docs": batch.n}
+    prior = batch.journal.ids
     if prior:
-        stored_docs = _read_parts(spark, store_dir, "docs", prior, _DOC_SCHEMA)
-        n_overlap = (
-            batch_docs.select("doc_id").join(stored_docs, "doc_id", "left_semi").count()
-        )
-        if n_overlap:
-            raise ValueError(
-                f"batch {batch_id!r} re-pushes {n_overlap} doc_ids already in the "
-                "store: doc_ids must be globally unique across batches"
-            )
+        stored_docs = store.read_parts(spark, store_dir, "docs", prior, _DOC_SCHEMA)
+        store.reject_repush(batch_docs, stored_docs, batch_id)
     t0 = time.time()
     segs = _segments(batch_docs).localCheckpoint(eager=True)  # ONE text pass
-    segs.write.mode("overwrite").parquet(_part(store_dir, "occ", batch_id))
+    segs.write.mode("overwrite").parquet(store.part(store_dir, "occ", batch_id))
     # batch-local keeper mins: one narrow row per distinct hash in the
     # batch — within-batch duplicate mass collapses here, at ingest
     (
@@ -150,26 +99,26 @@ def ingest_batch(batch_docs: DataFrame, store_dir: str, batch_id: str) -> dict:
         .agg(F.min(F.struct("doc_id", "para_idx")).alias("m"))
         .select("h", F.col("m.doc_id").alias("fdoc"), F.col("m.para_idx").alias("fidx"))
         .write.mode("overwrite")
-        .parquet(_part(store_dir, "minh", batch_id))
+        .parquet(store.part(store_dir, "minh", batch_id))
     )
     (
         batch_docs.select("doc_id")
         .join(segs.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_paras")), "doc_id", "left")
         .select("doc_id", F.coalesce("n_paras", F.lit(0)).cast("bigint").alias("n_paras"))
         .write.mode("overwrite")
-        .parquet(_part(store_dir, "docs", batch_id))
+        .parquet(store.part(store_dir, "docs", batch_id))
     )
     n_occ = segs.count()
     segs.unpersist()
-    lin.commit(
+    batch.journal.commit(
         batch_id,
-        rows=n_docs,
-        input_sig=sig_str,
+        rows=batch.n,
+        input_sig=batch.sig,
         format=PARA_STORE_FORMAT,
         n_occurrences=n_occ,
         duration_s=round(time.time() - t0, 3),
     )
-    return {"batch": batch_id, "skipped": False, "n_docs": n_docs, "n_occurrences": n_occ}
+    return {"batch": batch_id, "skipped": False, "n_docs": batch.n, "n_occurrences": n_occ}
 
 
 def paradedup_read(spark: SparkSession, store_dir: str) -> DataFrame:
@@ -178,13 +127,12 @@ def paradedup_read(spark: SparkSession, store_dir: str) -> DataFrame:
     removed_para_frac, new_text). Keep flags re-derive here (keeper flips
     are retroactive); the fold input is the compact per-batch min deltas,
     never text."""
-    lin = _lineage(store_dir)
-    batches = [e["partition"] for e in incremental._committed(lin.entries())]
+    batches = store.Journal(store_dir).ids
     if not batches:
         raise ValueError(f"paragraph store {store_dir!r} has no committed batches")
-    occ = _read_parts(spark, store_dir, "occ", batches, _OCC_SCHEMA)
-    minh = _read_parts(spark, store_dir, "minh", batches, _MIN_SCHEMA)
-    docs = _read_parts(spark, store_dir, "docs", batches, _DOC_SCHEMA)
+    occ = store.read_parts(spark, store_dir, "occ", batches, _OCC_SCHEMA)
+    minh = store.read_parts(spark, store_dir, "minh", batches, _MIN_SCHEMA)
+    docs = store.read_parts(spark, store_dir, "docs", batches, _DOC_SCHEMA)
     first = (
         minh.groupBy("h")
         .agg(F.min(F.struct(F.col("fdoc").alias("doc_id"), F.col("fidx").alias("para_idx"))).alias("first"))
@@ -217,61 +165,12 @@ def paradedup_read(spark: SparkSession, store_dir: str) -> DataFrame:
     )
 
 
-def ingest_stream(
-    stream_docs: DataFrame,
-    store_dir: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-):
-    """The paragraph store's ingest AS A STREAM — ``foreachBatch`` with
-    ``batch_id = f"s{epoch_id:09d}"``, the ``incremental.ingest_stream``
-    pattern: Spark replays a failed epoch under the same epoch id, the
-    journal's idempotent skip absorbs the retry, and a torn ingest redoes
-    its overwrite-idempotent partition writes before the single commit
-    line. Empty micro-batches return without touching the journal."""
-
-    def _sink(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        ingest_batch(batch_df, store_dir, f"s{epoch_id:09d}")
-
-    writer = (
-        stream_docs.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def incremental_paradedup_demo(
-    spark: SparkSession,
-    documents: DataFrame,
-    n_batches: int = 3,
-    store_dir: str | None = None,
-) -> DataFrame:
-    """The graded driver entry (``paragraph_dedup_incremental``): split the
-    corpus into ``n_batches`` deterministic interleaved arrival batches
-    (doc_id mod — repeated paragraphs routinely STRADDLE batches, so keeper
-    election genuinely crosses ingests), ingest them in order, return the
-    standing output. Oracle = the one-shot ``paragraph_dedup`` SQL over the
-    union corpus — the hash match proves N-batch ingest equals the one-shot
-    definition. Store dir defaults to the content-keyed /tmp scheme of
-    ``incremental_keep_list_demo`` (same re-entry, format-tag and pid
-    isolation arguments)."""
-    import hashlib
-    import tempfile
-
-    store = store_dir
-    if store is None:
-        _, _, sig_str = incremental._input_sig(documents)
-        key = hashlib.md5(
-            f"{sig_str}|{n_batches}|fmt{PARA_STORE_FORMAT}|pid{os.getpid()}".encode()
-        ).hexdigest()[:12]
-        store = os.path.join(tempfile.gettempdir(), f"ictspark_para_demo_{key}")
-    for i in range(n_batches):
-        ingest_batch(
-            documents.where(F.col("doc_id") % n_batches == i), store, f"b{i:03d}"
-        )
-    return paradedup_read(spark, store)
+def incremental_paradedup_demo(spark: SparkSession, documents: DataFrame) -> DataFrame:
+    """The graded driver entry (``paragraph_dedup_incremental``): ingest the
+    corpus as ``store.DEMO_BATCHES`` interleaved doc_id-mod arrival batches
+    (repeated paragraphs routinely STRADDLE batches, so keeper election
+    genuinely crosses ingests) and return the standing output. Oracle = the
+    one-shot ``paragraph_dedup`` SQL over the union corpus — the hash match
+    proves N-batch ingest equals the one-shot definition."""
+    store_dir = store.demo_store("para", documents, ingest_batch, f"fmt{PARA_STORE_FORMAT}")
+    return paradedup_read(spark, store_dir)

@@ -17,9 +17,7 @@ vector's coarse-cluster ASSIGNMENT once, at ingest, and each new batch:
       found when their batches ingested. Per-batch compute is
       O(batch × cluster occupancy), not O(corpus²);
   (c) appends the batch's qualifying pairs as an immutable partition and
-      journals ONE commit line (``checkpoint.Lineage``) that flips the
-      batch live — crash-retries overwrite idempotently, a committed batch
-      id re-ingest is a no-op (and raises if its CONTENT changed).
+      flips the batch live with one commit line (``extras.store``).
 
 No connected components, by the OPERATOR's own semantics: SemDeDup's keep
 rule is greedy lowest-id-survives — a vector is dropped iff ANY lower-id
@@ -51,8 +49,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ictspark.checkpoint import Lineage
-from ictspark.extras.incremental import _has_data_files
+from ictspark.extras import store
 from ictspark.extras.similarity import (
     SEMANTIC_THRESHOLD,
     _cluster_assign,
@@ -74,33 +71,8 @@ def _vec_root(store_dir: str) -> str:
     return os.path.join(store_dir, "vectors")
 
 
-def _pairs_root(store_dir: str) -> str:
-    return os.path.join(store_dir, "pairs")
-
-
 def _cent_path(store_dir: str) -> str:
     return os.path.join(store_dir, "centroids")
-
-
-def _lineage(store_dir: str) -> Lineage:
-    return Lineage(os.path.join(store_dir, "_ck"))
-
-
-def _committed(entries: list[dict]) -> list[dict]:
-    return [e for e in entries if e.get("status") == "committed"]
-
-
-def _input_sig(batch: DataFrame) -> tuple[int, int, str]:
-    """(rows, distinct vec_ids, content signature) — the incremental.py
-    change-detection algebra over (vec_id, embedding)."""
-    h = F.xxhash64("vec_id", "embedding")
-    r = batch.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.countDistinct("vec_id").alias("nd"),
-        F.coalesce(F.sum(F.pmod(h, F.lit(2**31))), F.lit(0)).alias("s"),
-        F.coalesce(F.bit_xor(h), F.lit(0)).alias("x"),
-    ).first()
-    return int(r["n"]), int(r["nd"]), f"{r['n']}:{r['s']}:{r['x']}"
 
 
 def _cent_sig(cents: DataFrame) -> str:
@@ -109,6 +81,34 @@ def _cent_sig(cents: DataFrame) -> str:
         F.count(F.lit(1)).alias("n"), F.coalesce(F.bit_xor(h), F.lit(0)).alias("x")
     ).first()
     return f"{r['n']}:{r['x']}"
+
+
+def _check_pinned(
+    journal: store.Journal,
+    store_dir: str,
+    centroids: DataFrame | None,
+    threshold: float,
+    n_buckets: int,
+) -> None:
+    """The store's identity: (threshold, n_buckets) sizing and the centroid
+    table, pinned by the first commit."""
+    if not journal.batches:
+        if centroids is None:
+            raise ValueError("first ingest must pass the centroid table to pin")
+        return
+    e0 = journal.batches[0]
+    if e0.get("threshold") != threshold or e0.get("n_buckets") != n_buckets:
+        raise ValueError(
+            f"semantic store {store_dir!r} was built at threshold="
+            f"{e0.get('threshold')}, n_buckets={e0.get('n_buckets')} — "
+            "sizing is immutable, use a new store"
+        )
+    if centroids is not None and _cent_sig(centroids) != e0.get("cent_sig"):
+        raise ValueError(
+            f"semantic store {store_dir!r} pins a different centroid table "
+            "— assignments are frozen against it; re-clustering means a "
+            "new store"
+        )
 
 
 def ingest_vectors(
@@ -123,74 +123,36 @@ def ingest_vectors(
     centroid table (required then; optional-but-verified later) and the
     (threshold, n_buckets) sizing; every later ingest must match."""
     spark = batch_embeddings.sparkSession
-    lin = _lineage(store_dir)
-    entries = lin.entries()
-    comm = _committed(entries)
-    n_rows, n_distinct, sig_str = _input_sig(batch_embeddings)
-    if comm:
-        e0 = comm[0]
-        if e0.get("format") != SEM_STORE_FORMAT:
-            raise ValueError(
-                f"semantic store {store_dir!r} is format v{e0.get('format')}; "
-                f"this code is v{SEM_STORE_FORMAT} — rebuild the store"
-            )
-        if e0.get("threshold") != threshold or e0.get("n_buckets") != n_buckets:
-            raise ValueError(
-                f"semantic store {store_dir!r} was built at threshold="
-                f"{e0.get('threshold')}, n_buckets={e0.get('n_buckets')} — "
-                "sizing is immutable, use a new store"
-            )
-        if centroids is not None and _cent_sig(centroids) != e0.get("cent_sig"):
-            raise ValueError(
-                f"semantic store {store_dir!r} pins a different centroid table "
-                "— assignments are frozen against it; re-clustering means a "
-                "new store"
-            )
-        cents = spark.read.parquet(_cent_path(store_dir))
-    else:
-        if centroids is None:
-            raise ValueError("first ingest must pass the centroid table to pin")
+    batch = store.open_batch(
+        batch_embeddings,
+        store_dir,
+        batch_id,
+        SEM_STORE_FORMAT,
+        "vec_id",
+        "embedding",
+        identity=lambda j: _check_pinned(j, store_dir, centroids, threshold, n_buckets),
+    )
+    n_rows = batch.n
+    if batch.skipped:
+        return {"batch": batch_id, "skipped": True, "n_vecs": n_rows, "n_new_pairs": 0}
+    if not batch.journal.batches:
         centroids.write.mode("overwrite").parquet(_cent_path(store_dir))
-        cents = spark.read.parquet(_cent_path(store_dir))
-    for e in comm:
-        if e["partition"] == batch_id:
-            if e.get("input_sig") != sig_str:
-                raise ValueError(
-                    f"batch {batch_id!r} already committed with different "
-                    f"content (stored {e.get('input_sig')}, got {sig_str})"
-                )
-            return {"batch": batch_id, "skipped": True, "n_vecs": n_rows, "n_new_pairs": 0}
-    if n_distinct != n_rows:
-        raise ValueError(
-            f"batch {batch_id!r} contains duplicate vec_ids "
-            f"({n_rows} rows, {n_distinct} distinct)"
-        )
+    cents = spark.read.parquet(_cent_path(store_dir))
     t0 = time.time()
-    committed_ids = [e["partition"] for e in comm]
-    # data-file-less partitions (an empty embedding batch, ADVICE r08) hold
-    # no vectors and would poison schema inference in multi-path reads
-    stored_paths = [
-        p
-        for c in committed_ids
-        if _has_data_files(p := os.path.join(_vec_root(store_dir), f"batch={c}"))
-    ]
+    committed_ids = batch.journal.ids
+    stored_paths = store.written_parts(store_dir, "vectors", committed_ids)
     if stored_paths:
         stored_ids = (
             spark.read.option("basePath", _vec_root(store_dir))
             .parquet(*stored_paths)
             .select("vec_id")
         )
-        n_overlap = batch_embeddings.select("vec_id").join(stored_ids, "vec_id", "left_semi").count()
-        if n_overlap:
-            raise ValueError(
-                f"batch {batch_id!r} re-pushes {n_overlap} vec_ids already in "
-                "the store: vec_ids must be globally unique across batches"
-            )
+        store.reject_repush(batch_embeddings, stored_ids, batch_id, "vec_id")
     # (a) assign ONLY the new batch — broadcast K rows, O(batch × K)
     assign = _cluster_assign(_with_norm(batch_embeddings), cents).withColumn(
         "cb", F.pmod(F.col("cent_id"), F.lit(n_buckets)).cast("int")
     )
-    batch_path = os.path.join(_vec_root(store_dir), f"batch={batch_id}")
+    batch_path = store.part(store_dir, "vectors", batch_id)
     (
         assign.repartition(n_buckets, "cb")
         .sortWithinPartitions("cb", "cent_id", "vec_id")
@@ -233,13 +195,7 @@ def ingest_vectors(
         )
         for c in committed_ids:
             for cb in touched:
-                p = os.path.join(root, f"batch={c}", f"cb={cb}")
-                for r_, _d, fs in os.walk(p):
-                    for f_ in fs:
-                        try:
-                            read_bytes += os.path.getsize(os.path.join(r_, f_))
-                        except OSError:
-                            pass
+                read_bytes += store.dir_bytes(os.path.join(root, f"batch={c}", f"cb={cb}"))
         probe = F.broadcast(b_new) if n_rows <= BROADCAST_MAX_VECS else b_new
         cross = (
             probe.alias("a")
@@ -253,14 +209,14 @@ def ingest_vectors(
             .where(F.col("sim") >= threshold)
         )
         pairs = pairs.unionByName(cross)
-    pairs_path = os.path.join(_pairs_root(store_dir), f"batch={batch_id}")
+    pairs_path = store.part(store_dir, "pairs", batch_id)
     pairs.write.mode("overwrite").parquet(pairs_path)
     n_new_pairs = spark.read.parquet(pairs_path).count()
     t_pairs = time.time()
-    lin.commit(
+    batch.journal.commit(
         batch_id,
         rows=n_rows,
-        input_sig=sig_str,
+        input_sig=batch.sig,
         n_new_pairs=int(n_new_pairs),
         threshold=threshold,
         n_buckets=n_buckets,
@@ -287,29 +243,22 @@ def semantic_keep_read(spark: SparkSession, store_dir: str) -> DataFrame:
     ``semantic_keep_list``'s exact output shape (vec_id, cent_id, keep),
     read from the store — one column-pruned scan of the assignments plus
     one of the pair partitions, no similarity math."""
-    lin = _lineage(store_dir)
-    comm = _committed(lin.entries())
-    if not comm:
+    ids = store.Journal(store_dir).ids
+    if not ids:
         raise ValueError(f"semantic store {store_dir!r} has no committed batches")
-    root = _vec_root(store_dir)
-    apaths = [
-        p
-        for e in comm
-        if _has_data_files(p := os.path.join(root, f"batch={e['partition']}"))
-    ]
+    apaths = store.written_parts(store_dir, "vectors", ids)
     if not apaths:
         raise ValueError(
             f"semantic store {store_dir!r} has no ingested vectors (all "
             "committed batches were empty)"
         )
     a = (
-        spark.read.option("basePath", root)
+        spark.read.option("basePath", _vec_root(store_dir))
         .parquet(*apaths)
         .select("vec_id", "cent_id")
     )
-    proot = _pairs_root(store_dir)
     dropped = (
-        spark.read.parquet(*[os.path.join(proot, f"batch={e['partition']}") for e in comm])
+        spark.read.parquet(*[store.part(store_dir, "pairs", i) for i in ids])
         .select(F.col("vec_b").alias("vec_id"))
         .distinct()
         .withColumn("keep", F.lit(0))
@@ -320,39 +269,25 @@ def semantic_keep_read(spark: SparkSession, store_dir: str) -> DataFrame:
 
 
 def incremental_semantic_demo(
-    spark: SparkSession,
-    embeddings: DataFrame,
-    n_batches: int = 3,
-    threshold: float = SEMANTIC_THRESHOLD,
-    store_dir: str | None = None,
+    spark: SparkSession, embeddings: DataFrame, threshold: float = SEMANTIC_THRESHOLD
 ) -> DataFrame:
     """The graded driver entry (``semantic_dedup_incremental``): pin the
-    fixed-subset quantizer over the corpus, ingest vec_id-mod interleaved
-    batches (semantic near-dups routinely straddle batches, so new-vs-stored
-    and the late-low-id keeper flip are genuinely exercised), return the
-    standing keep list. Oracle: the one-shot ``semantic_keep_list`` SQL over
-    the union corpus — the hash match proves batched ingest == the SemDeDup
-    definition. Store dir defaults content-keyed + pid-scoped, same
-    rationale as ``incremental_keep_list_demo``."""
+    fixed-subset quantizer over the corpus, ingest ``store.DEMO_BATCHES``
+    vec_id-mod interleaved batches (semantic near-dups routinely straddle
+    batches, so new-vs-stored and the late-low-id keeper flip are genuinely
+    exercised), return the standing keep list. Oracle: the one-shot
+    ``semantic_keep_list`` SQL over the union corpus — the hash match proves
+    batched ingest == the SemDeDup definition."""
     from ictspark.extras.similarity import fixed_centroids
 
-    store = store_dir
-    if store is None:
-        import hashlib
-        import tempfile
-
-        _, _, sig_str = _input_sig(embeddings)
-        key = hashlib.md5(
-            f"{sig_str}|{n_batches}|{threshold}|fmt{SEM_STORE_FORMAT}|pid{os.getpid()}".encode()
-        ).hexdigest()[:12]
-        store = os.path.join(tempfile.gettempdir(), f"ictspark_sem_demo_{key}")
     cents = fixed_centroids(embeddings)
-    for i in range(n_batches):
-        ingest_vectors(
-            embeddings.where(F.col("vec_id") % n_batches == i),
-            store,
-            f"b{i:03d}",
-            centroids=cents,
-            threshold=threshold,
-        )
-    return semantic_keep_read(spark, store)
+    store_dir = store.demo_store(
+        "sem",
+        embeddings,
+        lambda b, d, i: ingest_vectors(b, d, i, centroids=cents, threshold=threshold),
+        threshold,
+        f"fmt{SEM_STORE_FORMAT}",
+        id_col="vec_id",
+        content=("embedding",),
+    )
+    return semantic_keep_read(spark, store_dir)

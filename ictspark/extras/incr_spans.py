@@ -40,23 +40,19 @@ k)`` bit for bit, any split and arrival order — keeper election is a pure
 min over an arrival-order-free set, and span merging is per-doc math over
 facts that never depend on batching.
 
-Journal protocol: ``checkpoint.Lineage``; each ingest writes its three
-immutable ``batch=<id>`` partitions (occurrences, min delta, doc
-registry) then ONE commit line — overwrite-idempotent on retry; committed
-batch ids skip idempotently; content drift, duplicate/re-pushed doc_ids,
-and k mismatches raise (the shared guard battery).
+Each ingest writes three immutable ``batch=<id>`` partitions (occurrences,
+min delta, doc registry), then one commit line (``extras.store``) that
+records k.
 """
 
 from __future__ import annotations
 
-import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ictspark.checkpoint import Lineage
-from ictspark.extras import incremental
+from ictspark.extras import store
 
 SPAN_STORE_FORMAT = "s1"
 
@@ -65,19 +61,13 @@ _MIN_SCHEMA = "h string, fdoc long, fs int"
 _DOC_SCHEMA = "doc_id long, toks array<string>, n_tokens int"
 
 
-def _lineage(store_dir: str) -> Lineage:
-    return Lineage(os.path.join(store_dir, "_ck"))
-
-
-def _part(store_dir: str, what: str, batch_id: str) -> str:
-    return os.path.join(store_dir, what, f"batch={batch_id}")
-
-
-def _read_parts(
-    spark: SparkSession, store_dir: str, what: str, batch_ids: list[str], schema: str
-) -> DataFrame:
-    paths = [_part(store_dir, what, b) for b in batch_ids]
-    return spark.read.schema(schema).parquet(*paths)
+def _check_k(journal: store.Journal, store_dir: str, k: int) -> None:
+    for e in journal.batches:
+        if int(e.get("k", -1)) != k:
+            raise ValueError(
+                f"store {store_dir!r} was built with k={e.get('k')}; this ingest "
+                f"asks for k={k} — k is the store's identity, build a new store"
+            )
 
 
 def ingest_batch(
@@ -89,72 +79,45 @@ def ingest_batch(
     from ictspark.extras.dedup import _span_base
 
     spark = batch_docs.sparkSession
-    lin = _lineage(store_dir)
-    entries = incremental._committed(lin.entries())
-    n_docs, n_distinct, sig_str = incremental._input_sig(batch_docs)
-    for e in entries:
-        if e.get("format") != SPAN_STORE_FORMAT:
-            raise ValueError(
-                f"store {store_dir!r} has layout {e.get('format')!r}; this code "
-                f"writes {SPAN_STORE_FORMAT!r} — rebuild the store"
-            )
-        if int(e.get("k", -1)) != k:
-            raise ValueError(
-                f"store {store_dir!r} was built with k={e.get('k')}; this ingest "
-                f"asks for k={k} — k is the store's identity, build a new store"
-            )
-        if e["partition"] == batch_id:
-            if e.get("input_sig") != sig_str:
-                raise ValueError(
-                    f"batch {batch_id!r} already committed with different content "
-                    f"(stored {e.get('input_sig')}, got {sig_str}): batch ids are "
-                    "immutable — use a new id for new data"
-                )
-            return {"batch": batch_id, "skipped": True, "n_docs": n_docs}
-    if n_distinct != n_docs:
-        raise ValueError(
-            f"batch {batch_id!r} contains duplicate doc_ids "
-            f"({n_docs} rows, {n_distinct} distinct): doc_ids must be unique"
-        )
-    prior = [e["partition"] for e in entries]
+    batch = store.open_batch(
+        batch_docs,
+        store_dir,
+        batch_id,
+        SPAN_STORE_FORMAT,
+        identity=lambda j: _check_k(j, store_dir, k),
+    )
+    if batch.skipped:
+        return {"batch": batch_id, "skipped": True, "n_docs": batch.n}
+    prior = batch.journal.ids
     if prior:
-        stored_docs = _read_parts(spark, store_dir, "docs", prior, _DOC_SCHEMA)
-        n_overlap = (
-            batch_docs.select("doc_id")
-            .join(stored_docs.select("doc_id"), "doc_id", "left_semi")
-            .count()
-        )
-        if n_overlap:
-            raise ValueError(
-                f"batch {batch_id!r} re-pushes {n_overlap} doc_ids already in the "
-                "store: doc_ids must be globally unique across batches"
-            )
+        stored_docs = store.read_parts(spark, store_dir, "docs", prior, _DOC_SCHEMA)
+        store.reject_repush(batch_docs, stored_docs, batch_id)
     t0 = time.time()
     base, occs = _span_base(batch_docs, k)
     occs = occs.localCheckpoint(eager=True)  # ONE tokenize pass feeds both writes
-    occs.write.mode("overwrite").parquet(_part(store_dir, "occ", batch_id))
+    occs.write.mode("overwrite").parquet(store.part(store_dir, "occ", batch_id))
     (
         occs.groupBy("h")
         .agg(F.min(F.struct("doc_id", "s")).alias("m"))
         .select("h", F.col("m.doc_id").alias("fdoc"), F.col("m.s").alias("fs"))
         .write.mode("overwrite")
-        .parquet(_part(store_dir, "minh", batch_id))
+        .parquet(store.part(store_dir, "minh", batch_id))
     )
     base.select("doc_id", "toks", F.col("n_tokens").cast("int").alias("n_tokens")).write.mode(
         "overwrite"
-    ).parquet(_part(store_dir, "docs", batch_id))
+    ).parquet(store.part(store_dir, "docs", batch_id))
     n_occ = occs.count()
     occs.unpersist()
-    lin.commit(
+    batch.journal.commit(
         batch_id,
-        rows=n_docs,
-        input_sig=sig_str,
+        rows=batch.n,
+        input_sig=batch.sig,
         format=SPAN_STORE_FORMAT,
         k=k,
         n_occurrences=n_occ,
         duration_s=round(time.time() - t0, 3),
     )
-    return {"batch": batch_id, "skipped": False, "n_docs": n_docs, "n_occurrences": n_occ}
+    return {"batch": batch_id, "skipped": False, "n_docs": batch.n, "n_occurrences": n_occ}
 
 
 def spans_read(spark: SparkSession, store_dir: str) -> DataFrame:
@@ -166,15 +129,14 @@ def spans_read(spark: SparkSession, store_dir: str) -> DataFrame:
     (one definition, not a copy), running over the stored token arrays."""
     from ictspark.extras.dedup import _cut_spans
 
-    lin = _lineage(store_dir)
-    entries = incremental._committed(lin.entries())
-    batches = [e["partition"] for e in entries]
-    if not batches:
+    entries = store.Journal(store_dir).batches
+    if not entries:
         raise ValueError(f"span store {store_dir!r} has no committed batches")
+    batches = [e["partition"] for e in entries]
     k = int(entries[0]["k"])
-    occ = _read_parts(spark, store_dir, "occ", batches, _OCC_SCHEMA)
-    minh = _read_parts(spark, store_dir, "minh", batches, _MIN_SCHEMA)
-    docs = _read_parts(spark, store_dir, "docs", batches, _DOC_SCHEMA)
+    occ = store.read_parts(spark, store_dir, "occ", batches, _OCC_SCHEMA)
+    minh = store.read_parts(spark, store_dir, "minh", batches, _MIN_SCHEMA)
+    docs = store.read_parts(spark, store_dir, "docs", batches, _DOC_SCHEMA)
     first = minh.groupBy("h").agg(
         F.min(F.struct(F.col("fdoc").alias("doc_id"), F.col("fs").alias("s"))).alias(
             "first"
@@ -191,58 +153,11 @@ def spans_read(spark: SparkSession, store_dir: str) -> DataFrame:
     return _cut_spans(docs, dups, k, k)
 
 
-def ingest_stream(
-    stream_docs: DataFrame,
-    store_dir: str,
-    checkpoint_dir: str,
-    k: int = 8,
-    available_now: bool = True,
-):
-    """The span store's ingest AS A STREAM — ``foreachBatch`` with
-    ``batch_id = f"s{epoch_id:09d}"``, the shared exactly-once pattern:
-    epoch replays hit the journal's idempotent skip, torn ingests redo
-    their overwrite-idempotent writes before the single commit line.
-    Empty micro-batches return without touching the journal."""
-
-    def _sink(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        ingest_batch(batch_df, store_dir, f"s{epoch_id:09d}", k=k)
-
-    writer = (
-        stream_docs.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def incremental_spans_demo(
-    spark: SparkSession,
-    documents: DataFrame,
-    n_batches: int = 3,
-    store_dir: str | None = None,
-) -> DataFrame:
+def incremental_spans_demo(spark: SparkSession, documents: DataFrame) -> DataFrame:
     """The graded driver entry (``repeated_ngram_spans_incremental``):
-    ``n_batches`` interleaved doc_id-mod arrival batches (repeated spans
-    routinely straddle batches, so keeper election genuinely crosses
+    ``store.DEMO_BATCHES`` interleaved doc_id-mod arrival batches (repeated
+    spans routinely straddle batches, so keeper election genuinely crosses
     ingests), k=8 — the registry's pinned one-shot sizing. Oracle = the
-    one-shot ``repeated_ngram_spans`` SQL over the union corpus. Content-
-    keyed /tmp store dir (the established demo scheme)."""
-    import hashlib
-    import tempfile
-
-    store = store_dir
-    if store is None:
-        _, _, sig_str = incremental._input_sig(documents)
-        key = hashlib.md5(
-            f"{sig_str}|{n_batches}|fmt{SPAN_STORE_FORMAT}|pid{os.getpid()}".encode()
-        ).hexdigest()[:12]
-        store = os.path.join(tempfile.gettempdir(), f"ictspark_spans_demo_{key}")
-    for i in range(n_batches):
-        ingest_batch(
-            documents.where(F.col("doc_id") % n_batches == i), store, f"b{i:03d}", k=8
-        )
-    return spans_read(spark, store)
+    one-shot ``repeated_ngram_spans`` SQL over the union corpus."""
+    store_dir = store.demo_store("spans", documents, ingest_batch, f"fmt{SPAN_STORE_FORMAT}")
+    return spans_read(spark, store_dir)

@@ -15,14 +15,10 @@ at ingest, and each new batch:
       but never old-vs-old (those pairs were found when their batches
       ingested — this asymmetry IS the incrementality: per-batch COMPUTE is
       O(new × collision rate), not O(corpus²));
-  (c) MERGEs the keep-list labels through the checkpoint protocol
-      (``checkpoint.Lineage`` journal, the ``run_incremental`` pattern):
-      band rows append as an immutable ``batch=<id>`` partition, labels
-      write as a new snapshot version, and ONE journal commit line flips
-      both live — a crash before the commit leaves the previous state
-      authoritative and the re-ingest overwrite is idempotent. Re-ingesting
-      a committed batch id is a no-op (and raises if its CONTENT changed —
-      the same input-signature discipline the transcript checkpoint keeps).
+  (c) MERGEs the keep-list labels: band rows append as an immutable
+      ``batch=<id>`` partition, labels write as a new snapshot version, and
+      the store's one journal commit line (``extras.store``, the
+      ``run_incremental`` pattern) flips both live.
 
 Store layout v2 (r08 — VERDICT r07 item 1, "prune by key, don't scan the
 world", the reference's own date-named-subdir pruning, main.rs:59-68):
@@ -71,13 +67,14 @@ becomes a MERGE INTO and band rows an append (ICEBERG.md gates).
 
 from __future__ import annotations
 
+import functools
 import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ictspark.checkpoint import Lineage
+from ictspark.extras import store
 from ictspark.extras.curation import connected_components
 from ictspark.extras.dedup import (
     AUTO_MAX_BANDS,
@@ -148,54 +145,15 @@ def _auto_k(threshold: float) -> int:
     return bands
 
 
-def _bands_root(store_dir: str) -> str:
-    return os.path.join(store_dir, "bands")
-
-
-def _pairs_root(store_dir: str) -> str:
-    return os.path.join(store_dir, "pairs")
-
-
-def _labels_path(store_dir: str, version: str) -> str:
-    return os.path.join(store_dir, "labels", f"v={version}")
-
-
-def _lineage(store_dir: str) -> Lineage:
-    return Lineage(os.path.join(store_dir, "_ck"))
-
-
-def _committed(entries: list[dict]) -> list[dict]:
-    return [e for e in entries if e.get("status") == "committed"]
-
-
-def _input_sig(batch_docs: DataFrame) -> tuple[int, int, str]:
-    """(row count, distinct doc_id count, content signature) of a batch —
-    count + mod-2^31 sum + bit_xor of xxhash64(doc_id, text): exactly
-    ``checkpoint._day_stats``'s change-detection algebra (multiset-safe sum
-    that can't overflow ANSI bigint below 2^32 rows, plus an independent
-    64-bit xor). Any added/removed/edited doc changes it. The distinct count
-    rides the same single aggregation — it feeds the within-batch
-    duplicate-id guard (code-review r07)."""
-    h = F.xxhash64("doc_id", F.coalesce("text", F.lit("\u0000")))
-    r = batch_docs.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.countDistinct("doc_id").alias("nd"),
-        F.coalesce(F.sum(F.pmod(h, F.lit(2**31))), F.lit(0)).alias("s"),
-        F.coalesce(F.bit_xor(h), F.lit(0)).alias("x"),
-    ).first()
-    return int(r["n"]), int(r["nd"]), f"{r['n']}:{r['s']}:{r['x']}"
-
-
 def _read_labels(spark: SparkSession, store_dir: str, entries: list[dict]) -> DataFrame | None:
     """The labels snapshot the LAST journal commit points at (None before the
     first commit). The journal, not the directory listing, is authoritative —
     a crash after a labels write but before its commit line leaves an orphan
     version dir that is simply never read (and is overwritten idempotently
     when that batch retries)."""
-    comm = _committed(entries)
-    if not comm:
+    if not entries:
         return None
-    return spark.read.parquet(_labels_path(store_dir, comm[-1]["labels_version"]))
+    return spark.read.parquet(store.snapshot(store_dir, "labels", entries[-1]["labels_version"]))
 
 
 def _band_rows(sig: DataFrame, k: int, n_buckets: int) -> DataFrame:
@@ -288,44 +246,13 @@ def _local_cc(spark: SparkSession, nodes: DataFrame | None, edges: DataFrame) ->
     return spark.createDataFrame(out, schema="doc_id long, component long")
 
 
-def _has_data_files(path: str) -> bool:
-    """Whether a store partition dir holds any parquet data file. A
-    shingle-less (or empty) batch's partitionBy write commits a dir with
-    only _SUCCESS (ADVICE r08) — including it in a later multi-path read
-    would poison schema inference, and it contributes no rows anyway."""
-    for root, _dirs, files in os.walk(path):
-        if any(f.endswith(".parquet") for f in files):
-            return True
-    return False
-
-
-def _dir_bytes(path: str) -> int:
-    out = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            try:
-                out += os.path.getsize(os.path.join(root, f))
-            except OSError:
-                pass
-    return out
-
-
-def _check_store_params(
-    entries: list[dict], store_dir: str, threshold: float, k: int, n_buckets: int
+def _check_sizing(
+    journal: store.Journal, store_dir: str, threshold: float, k: int, n_buckets: int
 ) -> None:
-    """A store's identity — format, (threshold, k) sizing, bucket count — is
-    fixed by its FIRST commit; every later ingest must match it. Runs BEFORE
-    the committed-id idempotent skip (ADVICE r07): re-ingesting an already-
-    committed id under a different sizing must raise the sizing error, not
-    silently no-op."""
-    for e in _committed(entries):
-        fmt = e.get("format", 1)
-        if fmt != STORE_FORMAT:
-            raise ValueError(
-                f"store {store_dir!r} was written by store-format v{fmt}; this "
-                f"code reads/writes v{STORE_FORMAT} — rebuild the store (band-"
-                "row layouts are not cross-version compatible)"
-            )
+    """A store's sizing — (threshold, k) and bucket count — is fixed by its
+    FIRST commit; every later ingest must match it (the store's identity
+    check, run before the committed-id skip)."""
+    for e in journal.batches:
         if "k" in e and (e.get("k") != k or e.get("threshold") != threshold):
             raise ValueError(
                 f"store {store_dir!r} was built at threshold={e.get('threshold')} "
@@ -347,113 +274,44 @@ def ingest_batch(
     batch_id: str,
     threshold: float = LSH_THRESHOLD,
     n_buckets: int = STORE_BUCKETS,
-    hot_bucket_cap: int | None = None,
-    stored_rep_mode: bool = False,
 ) -> dict:
     """Ingest one batch of documents into the signature store; returns stats
-    (per-phase timings, pruned-read bytes, bucket occupancy — the numbers
-    scripts/incr_bench.py publishes).
+    (per-phase timings, pruned-read bytes, bucket occupancy).
 
     Steps (docstring at module top): signature the batch, write its band
     rows bb-partitioned, candidate-join new-vs-(stored ∪ new) reading only
     touched buckets, union the TOUCHED prior components' star edges,
-    re-converge, write the new labels snapshot, journal ONE commit. Batch
-    ids must be fresh strings (committed ids are idempotently skipped;
-    content drift under a reused id raises); doc_ids must be globally unique
-    across batches (enforced against the standing labels — a re-pushed
-    doc_id would corrupt the frozen signature store, so it fails loudly).
+    re-converge, write the new labels snapshot, journal ONE commit. The
+    guards are ``extras.store``'s; the re-push check runs against the
+    standing labels (a re-pushed doc_id would corrupt the frozen signature
+    store).
 
-    ``hot_bucket_cap`` (ADVICE r07, medium): with ``max_df=None`` (required
-    for frozen-signature purity) nothing bounds a band bucket's occupancy —
-    a boilerplate shingle whose hash is minimal for some permutation across
-    many docs makes that (band, bkey) bucket O(hot²) in new-vs-new and
-    O(hot × store) in new-vs-stored candidate rows. When set, buckets whose
-    occupancy across (stored-touched ∪ new) band rows exceeds the cap are
-    EXCLUDED from candidate generation for this ingest (join-time only —
-    stored band rows stay pure), bounding the blow-up at the cost of recall:
-    a pair whose only agreeing positions fall in capped buckets under-counts
-    ``nm`` and can drop below the threshold, so a capped store is NOT
-    bit-equal to ``full_recompute`` — production knob, off by default (the
-    graded/oracle path needs exact equality). Observability differs by path
-    (ADVICE r08): when capping, ``max_bucket_occupancy`` aggregates over
-    stored-touched ∪ new band rows — the full join input; on the uncapped
-    default path it aggregates the NEW batch only (O(batch) — the stored
-    side isn't scanned an extra time per ingest), so store-side hot-bucket
-    accumulation shows up there through ``n_collisions``, the candidate
-    join's true output size, not through ``max_bucket_occupancy``.
-
-    ``stored_rep_mode`` (VERDICT r08 item 4, opt-in): the connectivity-
-    sufficient stored side for the KEEP-LIST consumer. With r=1 banding on a
-    dup-dense corpus, the stored side of a hot bucket holds every MEMBER of
-    every component present, so per-batch candidate mass grows with cluster
-    membership forever. For keep decisions, connecting a new doc to the
-    COMPONENT suffices: the stored band rows are contracted to one row per
-    (band, bkey, component) whose doc_id IS the component label, so per-
-    bucket stored rows are bounded by component count, not membership.
-    Design note — the edge endpoint must be the LABEL, never a per-bucket
-    representative member: reps differ bucket-to-bucket, which SPLITS a new
-    doc's match count across rep ids and drops true edges below threshold
-    (a new doc matching a 2-member cluster in 30 buckets could score 15+15
-    and orphan). With the label endpoint, ``nm(new, label)`` counts bands
-    where ANY member shares the bucket — a RELAXATION of pair-level est:
-    it never under-counts a true (new, member) pair (every bucket that pair
-    shares also holds the component's contracted row), but it can cross the
-    threshold via bands contributed by DIFFERENT members when no single
-    pair would. So the PAIR SET is not the graded contract (like the
-    hot-bucket cap, this is a documented production knob, off by default),
-    and KEEP-LIST equality holds only where clusters are TIGHT (near-dup
-    members band-agree broadly, so the component's band union ≈ each
-    member's bands) — pinned empirically by
-    test_stored_rep_mode_keep_equality across splits/arrival orders incl.
-    the exact-dup cascade. On chain-structured dup-dense corpora it does
-    NOT hold: the sf1 measurement (BENCH/BASELINE.md r09) shows t_cand
-    flattening as designed (rep rows bounded by component count, 0.69 M vs
-    1.68 M member rows by batch 5) but merges snowballing through the
-    band-union relaxation — 31,440 / 49,968 keep flags diverge. Use only
-    on tight-cluster corpora; the exact path stays the default and the
-    graded contract. The saved stored-side mass is journaled
-    (``n_stored_rows`` vs ``n_rep_rows``). Costs one labels-side scan +
-    one distinct per ingest — O(pruned read), the rows the join consumes
-    anyway."""
+    ``max_bucket_occupancy`` aggregates the NEW batch's band rows only
+    (O(batch) — the stored side isn't scanned an extra time per ingest), so
+    store-side hot-bucket accumulation shows up through ``n_collisions``,
+    the candidate join's true output size."""
     spark = batch_docs.sparkSession
-    lin = _lineage(store_dir)
-    entries = lin.entries()
-    n_docs, n_distinct, sig_str = _input_sig(batch_docs)
     k = _auto_k(threshold)
-    _check_store_params(entries, store_dir, threshold, k, n_buckets)
-    for e in _committed(entries):
-        if e["partition"] == batch_id:
-            if e.get("input_sig") != sig_str:
-                raise ValueError(
-                    f"batch {batch_id!r} already committed with different "
-                    f"content (stored {e.get('input_sig')}, got {sig_str}): "
-                    "batch ids are immutable — use a new id for new data"
-                )
-            return {"batch": batch_id, "skipped": True, "n_docs": n_docs, "n_new_pairs": 0}
-    if n_distinct != n_docs:
-        # code-review r07: an internally-duplicated batch (upstream retry
-        # glued two files) would otherwise COMMIT — merged signatures,
-        # duplicate label rows, n_members=2 singletons — with no error
-        raise ValueError(
-            f"batch {batch_id!r} contains duplicate doc_ids "
-            f"({n_docs} rows, {n_distinct} distinct): doc_ids must be unique"
-        )
+    batch = store.open_batch(
+        batch_docs,
+        store_dir,
+        batch_id,
+        STORE_FORMAT,
+        identity=lambda j: _check_sizing(j, store_dir, threshold, k, n_buckets),
+    )
+    n_docs = batch.n
+    if batch.skipped:
+        return {"batch": batch_id, "skipped": True, "n_docs": n_docs, "n_new_pairs": 0}
     t0 = time.time()
-    prior = _read_labels(spark, store_dir, entries)
+    prior = _read_labels(spark, store_dir, batch.journal.batches)
     if prior is not None:
         prior = prior.persist()
-        n_overlap = batch_docs.select("doc_id").join(prior, "doc_id", "left_semi").count()
-        if n_overlap:
-            prior.unpersist()
-            raise ValueError(
-                f"batch {batch_id!r} re-pushes {n_overlap} doc_ids already in "
-                "the store: doc_ids must be globally unique across batches"
-            )
+    store.reject_repush(batch_docs, prior, batch_id)
     # (a) signature ONLY the new batch and write its band rows as the
     # immutable bb-partitioned store partition; reread so the store — not
     # the input frame's lineage — backs everything downstream (and the
     # overwrite makes a crash-retry idempotent)
-    batch_path = os.path.join(_bands_root(store_dir), f"batch={batch_id}")
+    batch_path = store.part(store_dir, "bands", batch_id)
     band_src = _band_rows(minhash_signatures(batch_docs, k, max_df=None), k, n_buckets)
     (
         band_src
@@ -479,18 +337,12 @@ def ingest_batch(
     # the buckets this batch touches — drives the pruned stored-side read;
     # ≤ n_buckets values, so the collect is bounded by construction
     touched = sorted(r["bb"] for r in b_new.select("bb").distinct().collect())
-    committed_ids = [e["partition"] for e in _committed(entries)]
+    committed_ids = batch.journal.ids
     stored = None
     read_bytes = 0
     if committed_ids and touched:
-        root = _bands_root(store_dir)
-        # drop data-file-less partitions (shingle-less batches, ADVICE r08):
-        # they contribute no band rows and would poison schema inference
-        paths = [
-            p
-            for cid in committed_ids
-            if _has_data_files(p := os.path.join(root, f"batch={cid}"))
-        ]
+        root = os.path.join(store_dir, "bands")
+        paths = store.written_parts(store_dir, "bands", committed_ids)
         if paths:
             stored = (
                 spark.read.option("basePath", root)
@@ -499,74 +351,28 @@ def ingest_batch(
             )
         for cid in committed_ids:
             for bb in touched:
-                read_bytes += _dir_bytes(os.path.join(root, f"batch={cid}", f"bb={bb}"))
-    # hot-bucket guard (ADVICE r07): occupancy over everything entering the
-    # candidate join when capping; when NOT capping, only the new side is
-    # aggregated (O(batch) — a corpus-wide hot key shows up in every batch
-    # in proportion, and n_collisions below is the direct join-blowup
-    # observable) so the stored side isn't scanned an extra time per ingest
-    n_hot = 0
-    if hot_bucket_cap is not None:
-        occ_src = b_new.select("band", "bkey")
-        if stored is not None:
-            occ_src = occ_src.unionByName(stored.select("band", "bkey"))
-        occ = occ_src.groupBy("band", "bkey").agg(F.count(F.lit(1)).alias("occ")).persist()
-        max_occ = (occ.agg(F.max("occ")).first() or [0])[0] or 0
-        # materialize hot BEFORE unpersisting occ (ADVICE r08): the two
-        # F.broadcast(hot) consumers below are lazy, and an unpersisted occ
-        # would silently re-run the occupancy aggregation — including the
-        # pruned stored-side scan — at join time, twice (the same
-        # unpersist-before-consumers pattern the r08 fix closed for
-        # new_pairs). eager localCheckpoint cuts hot's lineage off occ.
-        hot = (
-            occ.where(F.col("occ") > hot_bucket_cap)
-            .select("band", "bkey")
-            .localCheckpoint(eager=True)
-        )
-        n_hot = hot.count()
-        occ.unpersist()
-        if n_hot:
-            b_join = b_new.join(F.broadcast(hot), ["band", "bkey"], "left_anti")
-            if stored is not None:
-                stored = stored.join(F.broadcast(hot), ["band", "bkey"], "left_anti")
-        else:
-            b_join = b_new
-    else:
-        max_occ = (
-            b_new.groupBy("band", "bkey")
-            .agg(F.count(F.lit(1)).alias("occ"))
-            .agg(F.max("occ"))
-            .first()
-            or [0]
-        )[0] or 0
-        b_join = b_new
+                read_bytes += store.dir_bytes(os.path.join(root, f"batch={cid}", f"bb={bb}"))
+    # observability only: the NEW batch's max band-bucket occupancy
+    max_occ = (
+        b_new.groupBy("band", "bkey")
+        .agg(F.count(F.lit(1)).alias("occ"))
+        .agg(F.max("occ"))
+        .first()
+        or [0]
+    )[0] or 0
     # (b) candidates: new-vs-new (canonical a<b) ∪ new-vs-stored (sides
     # disjoint by the uniqueness guard; canonicalized with least/greatest) —
     # NEVER stored-vs-stored. With r=1, counting matching (band, bkey) rows
     # per pair IS the positional-match count, so est = round(n_matches/k, 4)
     # (the exact form minhash_lsh_pairs and the DuckDB oracle threshold on —
     # ADVICE r07: raw nm/k diverged within 5e-5 of an attainable m/k).
-    a, b = b_join.alias("a"), b_join.alias("b")
+    a, b = b_new.alias("a"), b_new.alias("b")
     cand = a.join(
         b,
         (F.col("a.band") == F.col("b.band"))
         & (F.col("a.bkey") == F.col("b.bkey"))
         & (F.col("a.doc_id") < F.col("b.doc_id")),
     ).select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-    n_stored_rows = n_rep_rows = None
-    if stored is not None and stored_rep_mode:
-        # contract the stored side to one row per (band, bkey, component),
-        # endpoint = the component LABEL (see docstring: a per-bucket member
-        # rep would split match counts across rep ids and orphan true
-        # edges). The labels join scans the O(corpus) narrow snapshot once
-        # per ingest; the distinct shuffles only the pruned stored rows.
-        n_stored_rows = stored.count()
-        stored = (
-            stored.join(prior, "doc_id")
-            .select("band", "bkey", F.col("component").alias("doc_id"))
-            .distinct()
-        )
-        n_rep_rows = stored.count()
     if stored is not None:
         # scatter the pruned stored read before the probe join (r08 bench
         # finding): the bb-sorted layout lays every row of a hot (band,bkey)
@@ -592,8 +398,7 @@ def ingest_batch(
         )
         cand = cand.unionByName(cross)
     pair_counts = cand.groupBy("doc_a", "doc_b").agg(F.count(F.lit(1)).alias("nm")).persist()
-    # collision mass = the join's true output size — the observable the
-    # hot-bucket cap exists to bound
+    # collision mass = the join's true output size
     n_collisions = (pair_counts.agg(F.sum("nm")).first() or [0])[0] or 0
     new_pairs = (
         pair_counts.where(F.round(F.col("nm") / F.lit(float(k)), 4) >= threshold)
@@ -608,7 +413,7 @@ def ingest_batch(
     # standing est≥threshold pair set over everything ingested — the compact
     # state downstream incremental consumers (the curation manifest) rebuild
     # their decisions from. Overwrite keeps crash-retries idempotent.
-    pairs_path = os.path.join(_pairs_root(store_dir), f"batch={batch_id}")
+    pairs_path = store.part(store_dir, "pairs", batch_id)
     new_pairs.write.mode("overwrite").parquet(pairs_path)
     # re-point downstream consumers at the WRITTEN partition (r08 bench
     # finding): the label phase's nodes/touched frames consume new_pairs
@@ -694,16 +499,16 @@ def ingest_batch(
     out_labels = labels
     if passthrough is not None:
         out_labels = passthrough.unionByName(expanded).unionByName(labels)
-    out_labels.write.mode("overwrite").parquet(_labels_path(store_dir, batch_id))
+    out_labels.write.mode("overwrite").parquet(store.snapshot(store_dir, "labels", batch_id))
     cc_labels.unpersist()
     if prior is not None:
         prior.unpersist()
         touched_comp.unpersist()
     t_labels = time.time()
-    lin.commit(
+    batch.journal.commit(
         batch_id,
         rows=n_docs,
-        input_sig=sig_str,
+        input_sig=batch.sig,
         n_new_pairs=n_new_pairs,
         labels_version=batch_id,
         threshold=threshold,
@@ -714,23 +519,11 @@ def ingest_batch(
         read_bytes_stored=read_bytes,
         n_collisions=int(n_collisions),
         max_bucket_occupancy=int(max_occ),
-        n_hot_buckets_capped=n_hot,
-        stored_rep_mode=bool(stored_rep_mode),
-        n_stored_rows=n_stored_rows,
-        n_rep_rows=n_rep_rows,
         duration_s=round(t_labels - t0, 3),
     )
-    # prune superseded labels snapshots (code-review r07: O(corpus) rows per
-    # snapshot × one snapshot per batch grows without bound; only the last
-    # committed version is ever read). Keep the new current AND its immediate
-    # predecessor — a reader that grabbed a frame just before this ingest
-    # stays valid; anything older is unreachable via the journal.
-    import shutil
-
-    prev_versions = [e["labels_version"] for e in _committed(entries)]
-    keep_versions = {batch_id} | set(prev_versions[-1:])
-    for v in set(prev_versions) - keep_versions:
-        shutil.rmtree(_labels_path(store_dir, v), ignore_errors=True)
+    store.prune_snapshots(
+        store_dir, "labels", [e["labels_version"] for e in batch.journal.batches], batch_id
+    )
     return {
         "batch": batch_id,
         "skipped": False,
@@ -740,10 +533,6 @@ def ingest_batch(
         "read_bytes_stored": read_bytes,
         "n_collisions": int(n_collisions),
         "max_bucket_occupancy": int(max_occ),
-        "n_hot_buckets_capped": n_hot,
-        "stored_rep_mode": bool(stored_rep_mode),
-        "n_stored_rows": n_stored_rows,
-        "n_rep_rows": n_rep_rows,
         "t_sig_s": round(t_sig - t0, 3),
         "t_cand_s": round(t_cand - t_sig, 3),
         "t_cc_s": round(t_cc - t_cand, 3),
@@ -754,71 +543,9 @@ def ingest_batch(
     }
 
 
-def ingest_stream(
-    stream_docs: DataFrame,
-    store_dir: str,
-    checkpoint_dir: str,
-    threshold: float = LSH_THRESHOLD,
-    available_now: bool = True,
-    n_buckets: int = STORE_BUCKETS,
-    hot_bucket_cap: int | None = None,
-):
-    """The ingest path AS A STREAM (r07): a Structured Streaming document
-    source drained into the signature store through ``foreachBatch``, one
-    ``ingest_batch`` per micro-batch with ``batch_id = f"s{epoch_id:09d}"``.
-
-    Exactly-once by COMPOSITION, not by a new mechanism: Spark replays a
-    failed epoch under the SAME epoch_id with the SAME source offsets, so a
-    retry re-enters ``ingest_batch`` under an already-committed batch id with
-    identical content and hits the journal's idempotent skip; a crash BEFORE
-    the store commit re-runs the whole ingest whose writes are overwrite-
-    idempotent. The two journals (Spark's streaming checkpoint and the
-    store's lineage) never disagree observably: the store journal is the
-    authoritative one, and the streaming checkpoint only ever re-offers work
-    the store either skips or safely redoes. This is the same double-journal
-    argument ``checkpoint.run_incremental`` makes for the transcript store
-    (checkpoint.py:208), applied to the curation family.
-
-    Empty micro-batches return without touching the journal (availableNow
-    commonly emits one). The returned ``StreamingQuery`` is live; with the
-    default availableNow trigger it self-terminates when the source is
-    drained — ``query.awaitTermination()`` then read ``keep_list``.
-
-    Scale shape: identical to batch ingest — per-epoch COMPUTE is
-    O(batch × collision rate) regardless of store size and the stored-side
-    read prunes to the epoch's touched buckets, so a continuous trigger
-    gives standing near-dup maintenance over an arriving corpus with no
-    recompute — and trickle epochs are exactly the regime the bucket
-    pruning is strongest in. Store-side guards (content drift,
-    duplicate/re-pushed doc_ids, sizing immutability) fail the QUERY loudly
-    rather than commit corruption — upstream must fix the feed, exactly
-    like the batch path."""
-
-    def _sink(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        ingest_batch(
-            batch_df,
-            store_dir,
-            f"s{epoch_id:09d}",
-            threshold,
-            n_buckets=n_buckets,
-            hot_bucket_cap=hot_bucket_cap,
-        )
-
-    writer = (
-        stream_docs.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def components(spark: SparkSession, store_dir: str) -> DataFrame:
     """Current (doc_id, component) labels — the last committed snapshot."""
-    labels = _read_labels(spark, store_dir, _lineage(store_dir).entries())
+    labels = _read_labels(spark, store_dir, store.Journal(store_dir).batches)
     if labels is None:
         raise ValueError(f"signature store {store_dir!r} has no committed batches")
     return labels
@@ -829,13 +556,12 @@ def pairs(spark: SparkSession, store_dir: str) -> DataFrame:
     committed batch — the union of each ingest's NEW pairs (each pair is
     found exactly once; see ``ingest_batch``). Journal-gated: an orphan
     pairs dir from a torn ingest is never read."""
-    comm = _committed(_lineage(store_dir).entries())
-    if not comm:
+    ids = store.Journal(store_dir).ids
+    if not ids:
         raise ValueError(f"signature store {store_dir!r} has no committed batches")
-    root = _pairs_root(store_dir)
     return (
-        spark.read.option("basePath", root)
-        .parquet(*[os.path.join(root, f"batch={e['partition']}") for e in comm])
+        spark.read.option("basePath", os.path.join(store_dir, "pairs"))
+        .parquet(*[store.part(store_dir, "pairs", i) for i in ids])
         .select("doc_a", "doc_b")
     )
 
@@ -877,44 +603,20 @@ def full_recompute(documents: DataFrame, threshold: float = LSH_THRESHOLD) -> Da
 
 
 def incremental_keep_list_demo(
-    spark: SparkSession,
-    documents: DataFrame,
-    n_batches: int = 3,
-    threshold: float = LSH_THRESHOLD,
-    store_dir: str | None = None,
+    spark: SparkSession, documents: DataFrame, threshold: float = LSH_THRESHOLD
 ) -> DataFrame:
-    """The graded driver entry (``dedup_incremental``): split the corpus into
-    ``n_batches`` deterministic arrival batches (doc_id mod — interleaved,
-    so near-dup pairs routinely STRADDLE batches and the new-vs-stored join
-    is genuinely exercised), ingest them in order into a store, and return
-    the standing keep list. Its oracle is the brute est-over-all-pairs +
-    WITH RECURSIVE ground truth over the whole corpus (uncapped) — the
-    driver's hash match proves the batched ingest path equals the one-shot
-    definition.
-
-    The default store dir is DETERMINISTIC in (corpus content, n_batches,
-    threshold, STORE_FORMAT, pid) — code-review r07: a fresh mkdtemp per
-    invocation left one full signature store per grading/parity run
-    accumulating under /tmp; keyed on the content signature, a re-run on the
-    same corpus IN THE SAME PROCESS re-enters the same store and every
-    ingest is an idempotent journal skip (which also exercises the resume
-    path for free). The format tag means a layout change can never read a
-    stale pre-upgrade store, and the pid keeps concurrently-running
-    processes (driver grading + parity) in separate stores — the journal
-    append and parquet overwrite have no cross-process locking (ADVICE
-    r07)."""
-    import hashlib
-    import tempfile
-
-    store = store_dir
-    if store is None:
-        _, _, sig_str = _input_sig(documents)
-        key = hashlib.md5(
-            f"{sig_str}|{n_batches}|{threshold}|fmt{STORE_FORMAT}|pid{os.getpid()}".encode()
-        ).hexdigest()[:12]
-        store = os.path.join(tempfile.gettempdir(), f"ictspark_incr_demo_{key}")
-    for i in range(n_batches):
-        ingest_batch(
-            documents.where(F.col("doc_id") % n_batches == i), store, f"b{i:03d}", threshold
-        )
-    return keep_list(spark, store)
+    """The graded driver entry (``dedup_incremental``): ingest the corpus as
+    ``store.DEMO_BATCHES`` interleaved doc_id-mod arrival batches (near-dup
+    pairs routinely STRADDLE batches, so the new-vs-stored join is genuinely
+    exercised) into the content-keyed demo store and return the standing
+    keep list. Its oracle is the brute est-over-all-pairs + WITH RECURSIVE
+    ground truth over the whole corpus (uncapped) — the driver's hash match
+    proves the batched ingest path equals the one-shot definition."""
+    store_dir = store.demo_store(
+        "incr",
+        documents,
+        functools.partial(ingest_batch, threshold=threshold),
+        threshold,
+        f"fmt{STORE_FORMAT}",
+    )
+    return keep_list(spark, store_dir)

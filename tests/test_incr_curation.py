@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from ictspark import io
 from ictspark.extras import incr_curation as IC
 from ictspark.extras.curation import BENCHMARK_MAX_ID, curate_pipeline
+from ictspark.extras.store import Journal, ingest_stream
 
 SF = "/root/testdata/sf0.01"
 
@@ -138,13 +139,9 @@ def test_stream_ingest_equals_oneshot_manifest(spark, docs, tmp_path_factory):
     stream = (
         spark.readStream.schema(docs.schema).option("maxFilesPerTrigger", 1).parquet(src)
     )
-    q = IC.ingest_stream(stream, store, ck)
+    q = ingest_stream(IC.ingest_batch, stream, store, ck)
     assert q.awaitTermination(300), "availableNow drain did not self-terminate"
-    committed = [
-        e
-        for e in IC.incremental._committed(IC._lineage(store).entries())
-        if e["partition"] != IC.INIT_PARTITION
-    ]
+    committed = Journal(store).batches
     assert len(committed) == 2  # one epoch per file — multi-epoch path real
     # the one-shot must use the STORE's benchmark (fixed at init over the
     # full corpus), not `first`'s id-derived default — the store's
@@ -155,17 +152,14 @@ def test_stream_ingest_equals_oneshot_manifest(spark, docs, tmp_path_factory):
     # resume: a third file arrives; the restarted stream ingests exactly one
     # more epoch and the manifest converges on the union's one-shot
     docs.where(F.col("doc_id") % 3 == 2).coalesce(1).write.mode("append").parquet(src)
-    q2 = IC.ingest_stream(
+    q2 = ingest_stream(
+        IC.ingest_batch,
         spark.readStream.schema(docs.schema).option("maxFilesPerTrigger", 1).parquet(src),
         store,
         ck,
     )
     assert q2.awaitTermination(300)
-    after = [
-        e
-        for e in IC.incremental._committed(IC._lineage(store).entries())
-        if e["partition"] != IC.INIT_PARTITION
-    ]
+    after = Journal(store).batches
     assert len(after) == 3
     assert _rows(IC.manifest(spark, store)) == _oneshot(docs)
 

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from ictspark import io
 from ictspark.extras import incr_para as IP
-from ictspark.extras import incremental
+from ictspark.extras.store import Journal, ingest_stream, part
 from ictspark.extras.dedup import paragraph_dedup
 
 SF = "/root/testdata/sf0.01"
@@ -124,10 +124,10 @@ def test_stream_ingest_equals_oneshot(spark, docs, tmp_path_factory):
         .option("maxFilesPerTrigger", 1)
         .parquet(os.path.join(src, "*"))
     )
-    IP.ingest_stream(stream, store, ck).awaitTermination()
+    ingest_stream(IP.ingest_batch, stream, store, ck).awaitTermination()
     union = half0.unionByName(half1)
     assert _rows(IP.paradedup_read(spark, store)) == _rows(paragraph_dedup(union))
-    n_committed = len(incremental._committed(IP._lineage(store).entries()))
+    n_committed = len(Journal(store).batches)
     # resume: drop a new file, restart the stream from the checkpoint —
     # exactly one new batch commits
     late = docs.where((F.col("doc_id") % 2 == 1) & (F.col("doc_id") % 7 == 0))
@@ -137,8 +137,8 @@ def test_stream_ingest_equals_oneshot(spark, docs, tmp_path_factory):
         .option("maxFilesPerTrigger", 1)
         .parquet(os.path.join(src, "*"))
     )
-    IP.ingest_stream(stream2, store, ck).awaitTermination()
-    n_after = len(incremental._committed(IP._lineage(store).entries()))
+    ingest_stream(IP.ingest_batch, stream2, store, ck).awaitTermination()
+    n_after = len(Journal(store).batches)
     assert n_after == n_committed + 1
     assert _rows(IP.paradedup_read(spark, store)) == _rows(paragraph_dedup(docs))
 
@@ -155,7 +155,7 @@ def test_orphan_partition_ignored(spark, docs, tmp_path_factory):
     # simulate b1's torn ingest: an occurrence partition exists, no commit
     spark.createDataFrame(
         [(999_999, 0, "deadbeef", "ghost para")], IP._OCC_SCHEMA
-    ).write.mode("overwrite").parquet(IP._part(store, "occ", "b1"))
+    ).write.mode("overwrite").parquet(part(store, "occ", "b1"))
     assert _rows(IP.paradedup_read(spark, store)) == after_b0  # orphan unread
     IP.ingest_batch(b1, store, "b1")  # retry overwrites the orphan
     got = {r["doc_id"] for r in IP.paradedup_read(spark, store).collect()}

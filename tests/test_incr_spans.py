@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from ictspark import io
 from ictspark.extras import incr_spans as IS
-from ictspark.extras import incremental
+from ictspark.extras.store import Journal, ingest_stream, part
 from ictspark.extras.dedup import repeated_ngram_spans
 
 SF = "/root/testdata/sf0.01"
@@ -128,10 +128,10 @@ def test_stream_ingest_equals_oneshot(spark, docs, tmp_path_factory):
         .option("maxFilesPerTrigger", 1)
         .parquet(os.path.join(src, "*"))
     )
-    IS.ingest_stream(stream, store, ck).awaitTermination()
+    ingest_stream(IS.ingest_batch, stream, store, ck).awaitTermination()
     union = half0.unionByName(half1)
     assert _rows(IS.spans_read(spark, store)) == _rows(repeated_ngram_spans(union, k=8))
-    n_committed = len(incremental._committed(IS._lineage(store).entries()))
+    n_committed = len(Journal(store).batches)
     late = docs.where((F.col("doc_id") % 2 == 1) & (F.col("doc_id") % 7 == 0))
     late.coalesce(1).write.parquet(os.path.join(src, "f2"))
     stream2 = (
@@ -139,8 +139,8 @@ def test_stream_ingest_equals_oneshot(spark, docs, tmp_path_factory):
         .option("maxFilesPerTrigger", 1)
         .parquet(os.path.join(src, "*"))
     )
-    IS.ingest_stream(stream2, store, ck).awaitTermination()
-    n_after = len(incremental._committed(IS._lineage(store).entries()))
+    ingest_stream(IS.ingest_batch, stream2, store, ck).awaitTermination()
+    n_after = len(Journal(store).batches)
     assert n_after == n_committed + 1
     assert _rows(IS.spans_read(spark, store)) == _rows(repeated_ngram_spans(docs, k=8))
 
@@ -156,7 +156,7 @@ def test_orphan_partition_ignored(spark, docs, tmp_path_factory):
     after_b0 = _rows(IS.spans_read(spark, store))
     spark.createDataFrame(
         [(999_999, 0, "deadbeef")], IS._OCC_SCHEMA
-    ).write.mode("overwrite").parquet(IS._part(store, "occ", "b1"))
+    ).write.mode("overwrite").parquet(part(store, "occ", "b1"))
     assert _rows(IS.spans_read(spark, store)) == after_b0  # orphan unread
     IS.ingest_batch(b1, store, "b1")  # retry overwrites the orphan
     got = {r["doc_id"] for r in IS.spans_read(spark, store).collect()}

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from ictspark import io
 from ictspark.extras import incremental
+from ictspark.extras.store import Journal, ingest_stream, snapshot
 
 SF = "/root/testdata/sf0.01"
 
@@ -28,7 +29,9 @@ def test_incremental_equals_full_recompute(spark, docs, tmp_path_factory):
     near-dup pairs straddle batches, so the new-vs-stored band join is
     genuinely load-bearing) == one-shot full recompute, including component
     MERGES across batches; and a different split (2 batches) converges to
-    the identical keep list (arrival order cannot matter)."""
+    the identical keep list (arrival order cannot matter). Includes the
+    exact-dup cascade: a later batch's smaller-id exact copy re-labels a
+    stored component that a still later batch connects through."""
     full = _kl(incremental.full_recompute(docs))
     store3 = str(tmp_path_factory.mktemp("incr3"))
     stats = [
@@ -47,6 +50,25 @@ def test_incremental_equals_full_recompute(spark, docs, tmp_path_factory):
             docs.where(F.col("doc_id") % 2 == i), store2, f"half{i}"
         )
     assert _kl(incremental.keep_list(spark, store2)) == full
+    # exact-dup cascade: b1 forms {100,101}; b2's doc 50 is an exact copy of
+    # 100 (label re-elects to 50); b3's doc 200 near-dups 101 and must
+    # connect THROUGH the re-labeled component
+    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 4
+    rows = {
+        100: base,
+        101: base + "lambda mu",
+        50: base,  # exact copy of 100, smaller id
+        200: base + "nu xi",
+    }
+    mk = lambda ids: spark.createDataFrame(  # noqa: E731
+        [(i, rows[i]) for i in ids], "doc_id long, text string"
+    )
+    union_kl = _kl(incremental.full_recompute(mk(sorted(rows))))
+    for order in (([100, 101], [50], [200]), ([200], [100, 101], [50])):
+        store = str(tmp_path_factory.mktemp("incr_casc"))
+        for j, ids in enumerate(order):
+            incremental.ingest_batch(mk(ids), store, f"c{j}")
+        assert _kl(incremental.keep_list(spark, store)) == union_kl
 
 
 def test_ingest_idempotent_and_guards(spark, docs, tmp_path_factory):
@@ -99,9 +121,9 @@ def test_stream_ingest_equals_full_recompute(spark, docs, tmp_path_factory):
     stream = (
         spark.readStream.schema(docs.schema).option("maxFilesPerTrigger", 1).parquet(src)
     )
-    q = incremental.ingest_stream(stream, store, ck)
+    q = ingest_stream(incremental.ingest_batch, stream, store, ck)
     assert q.awaitTermination(120), "availableNow drain did not self-terminate"
-    n_commits = len(incremental._committed(incremental._lineage(store).entries()))
+    n_commits = len(Journal(store).batches)
     assert n_commits == 2  # one epoch per file — the multi-epoch path is real
     assert _kl(incremental.keep_list(spark, store)) == _kl(
         incremental.full_recompute(first)
@@ -110,13 +132,14 @@ def test_stream_ingest_equals_full_recompute(spark, docs, tmp_path_factory):
     # one more epoch (prior files are in the streaming checkpoint, prior
     # epochs in the store journal) and converge on the union ground truth
     docs.where(F.col("doc_id") % 3 == 2).coalesce(1).write.mode("append").parquet(src)
-    q2 = incremental.ingest_stream(
+    q2 = ingest_stream(
+        incremental.ingest_batch,
         spark.readStream.schema(docs.schema).option("maxFilesPerTrigger", 1).parquet(src),
         store,
         ck,
     )
     assert q2.awaitTermination(120)
-    n_after = len(incremental._committed(incremental._lineage(store).entries()))
+    n_after = len(Journal(store).batches)
     assert n_after == 3
     assert _kl(incremental.keep_list(spark, store)) == _kl(incremental.full_recompute(docs))
 
@@ -133,7 +156,7 @@ def test_orphan_labels_snapshot_ignored(spark, docs, tmp_path_factory):
     # simulate the torn ingest of b001: labels snapshot exists, no commit
     spark.createDataFrame([(999_999, 999_999)], "doc_id long, component long").write.mode(
         "overwrite"
-    ).parquet(incremental._labels_path(store, "b001"))
+    ).parquet(snapshot(store, "labels", "b001"))
     assert _kl(incremental.keep_list(spark, store)) == after_b0  # orphan unread
     incremental.ingest_batch(b1, store, "b001")  # retry overwrites the orphan
     got = {r["doc_id"] for r in incremental.components(spark, store).collect()}
@@ -155,7 +178,7 @@ def test_store_format_and_bucket_guards(spark, docs, tmp_path_factory):
     # the stats expose the pruning/occupancy observables
     for key in (
         "touched_buckets", "read_bytes_stored", "n_collisions",
-        "max_bucket_occupancy", "n_hot_buckets_capped",
+        "max_bucket_occupancy",
         "t_sig_s", "t_cand_s", "t_cc_s", "t_labels_s",
     ):
         assert key in st, key
@@ -174,80 +197,12 @@ def test_store_format_and_bucket_guards(spark, docs, tmp_path_factory):
             docs.where(F.col("doc_id") % 3 == 2), store, "b002", n_buckets=8
         )
     # an old-format journal line is refused before any read or write
-    lin = incremental._lineage(store)
+    lin = Journal(store)
     lin.commit("b_old", labels_version="b_old", input_sig="x", threshold=0.2,
                k=42, format=1, n_buckets=64)
     with pytest.raises(ValueError, match="store-format"):
         incremental.ingest_batch(
             docs.where(F.col("doc_id") % 3 == 2), store, "b002"
-        )
-
-
-def test_hot_bucket_cap(spark, docs, tmp_path_factory):
-    """ADVICE r07 (medium): the join-time hot-bucket occupancy cap. With a
-    cap no bucket can exceed, results are bit-equal to the uncapped path
-    (the cap only ever REMOVES candidate rows, so a non-binding cap is a
-    no-op); with a cap of 1 every shared bucket is excluded, so no pairs
-    survive — the two ends of the recall trade, both loud in the stats."""
-    full = _kl(incremental.full_recompute(docs))
-    store_hi = str(tmp_path_factory.mktemp("incr_cap_hi"))
-    stats = [
-        incremental.ingest_batch(
-            docs.where(F.col("doc_id") % 2 == i), store_hi, f"b{i}",
-            hot_bucket_cap=10**9,
-        )
-        for i in range(2)
-    ]
-    assert all(s["n_hot_buckets_capped"] == 0 for s in stats)
-    assert _kl(incremental.keep_list(spark, store_hi)) == full
-    store_lo = str(tmp_path_factory.mktemp("incr_cap_lo"))
-    st = incremental.ingest_batch(docs, store_lo, "b0", hot_bucket_cap=1)
-    assert st["n_new_pairs"] == 0  # every occupied bucket has ≥2 rows or no pair
-    assert st["n_hot_buckets_capped"] > 0
-    assert st["max_bucket_occupancy"] > 1
-
-
-def test_stored_rep_mode_keep_equality(spark, docs, tmp_path_factory):
-    """VERDICT r08 item 4: the connectivity-sufficient stored side
-    (stored_rep_mode=True — one contracted row per (band, bkey, component),
-    endpoint = the component label). The PAIR SET is a documented relaxation,
-    but the KEEP LIST must equal the one-shot recompute on the fixture corpus
-    across splits AND arrival orders, including the exact-dup cascade (a
-    later batch's smaller-id exact copy re-labels a stored component whose
-    contracted rows later batches connect through)."""
-    full = _kl(incremental.full_recompute(docs))
-    for tag, (mod, order) in {"r3": (3, range(3)), "r2": (2, (1, 0))}.items():
-        store = str(tmp_path_factory.mktemp(f"incr_rep_{tag}"))
-        stats = [
-            incremental.ingest_batch(
-                docs.where(F.col("doc_id") % mod == i), store, f"{tag}b{i}",
-                stored_rep_mode=True,
-            )
-            for i in order
-        ]
-        late = stats[-1]
-        assert late["stored_rep_mode"] and late["n_rep_rows"] <= late["n_stored_rows"]
-        assert _kl(incremental.keep_list(spark, store)) == full
-    # exact-dup cascade: b1 forms {100,101}; b2's doc 50 is an exact copy of
-    # 100 (label re-elects to 50); b3's doc 200 near-dups 101 and must
-    # connect THROUGH the re-labeled component's contracted rows
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 4
-    rows = {
-        100: base,
-        101: base + "lambda mu",
-        50: base,  # exact copy of 100, smaller id
-        200: base + "nu xi",
-    }
-    mk = lambda ids: spark.createDataFrame(  # noqa: E731
-        [(i, rows[i]) for i in ids], "doc_id long, text string"
-    )
-    union = mk(sorted(rows))
-    for order in (([100, 101], [50], [200]), ([200], [100, 101], [50])):
-        store = str(tmp_path_factory.mktemp("incr_rep_casc"))
-        for j, ids in enumerate(order):
-            incremental.ingest_batch(mk(ids), store, f"c{j}", stored_rep_mode=True)
-        assert _kl(incremental.keep_list(spark, store)) == _kl(
-            incremental.full_recompute(union)
         )
 
 
