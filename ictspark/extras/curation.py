@@ -28,7 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ictspark.extras.dedup import MAX_SHINGLE_DF, _barrier, minhash_lsh_pairs
+from ictspark.extras.dedup import MAX_SHINGLE_DF, minhash_lsh_pairs
+from ictspark.session import barrier
 
 EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 URL_RE = r"https?://[^\s]+"
@@ -53,8 +54,8 @@ def near_dup_labels(
     labels come back as a broadcast-hinted driver-built frame — bounded by
     the rail, never by corpus size. Above it the symmetric edges are built
     and the distributed ``connected_components`` fixpoint runs unchanged
-    over the edge endpoints; its labels are checkpointed (the
-    ``dedup._barrier`` rule) so no cache is left for the caller to release.
+    over the edge endpoints; its labels go through ``session.barrier`` so
+    no cache is left for the caller to release.
     ``max_df`` passes through to the shingle df-cap — ``None`` gives the
     uncapped, per-doc-pure pair definition the incremental stores use."""
     from ictspark.extras.incremental import _local_cc, under_cc_rail
@@ -75,7 +76,7 @@ def near_dup_labels(
             labels = connected_components(nodes, edges, max_iter)
         finally:
             edges.unpersist()
-        out = _barrier(labels)
+        out = barrier(labels, eager=True)
         labels.unpersist()
         return out
     finally:
@@ -149,7 +150,7 @@ def connected_components(nodes: DataFrame, edges: DataFrame, max_iter: int = 100
         # algorithms otherwise grow the plan linearly, inflating driver
         # analysis time at high-diameter graphs (standard hygiene at scale)
         if it % 4 == 3:
-            ck = labels.localCheckpoint(eager=True)
+            ck = barrier(labels, eager=True)
             cached.unpersist()  # the checkpoint replaces the cache — don't leak it
             cached = ck
             labels = ck
@@ -196,11 +197,8 @@ def dedup_keep_list(documents: DataFrame, max_df: int | None = MAX_SHINGLE_DF) -
     so the keep flags are ground-truth-checked end to end. ``max_df=None``
     gives the uncapped pair definition (per-doc-pure signatures — the form
     the incremental stores maintain and their one-shot oracles restate)."""
-    # materialized (small: 4 narrow cols × #docs) under the shared barrier
-    # rule — a RELIABLE checkpoint when the session has a checkpoint dir
-    # (ADVICE r03: localCheckpoint blocks die with their executor), else a
-    # localCheckpoint; the ContextCleaner reclaims it once unreferenced
-    return _barrier(keep_columns(dedup_components(documents, max_df=max_df)))
+    # small (4 narrow cols × #docs); see session.barrier
+    return barrier(keep_columns(dedup_components(documents, max_df=max_df)))
 
 
 def corpus_mix(documents: DataFrame) -> DataFrame:
@@ -757,24 +755,6 @@ def curate_pipeline(
             "text", F.coalesce("_cut_text", "text")
         ).drop("_cut_text")
 
-    def _ckpt(df: DataFrame) -> DataFrame:
-        """Materialization barrier between stages: every drop branch AND the
-        next stage read each survivor set, so an un-checkpointed chain
-        re-derives the quality scan / exact groupBy / shingle build once per
-        consumer (measured 42 s -> 31 s at sf1 with barriers on the three
-        survivor frames). Same reliability contract as dedup_keep_list: a
-        RELIABLE checkpoint when the session has one configured (the real-
-        cluster setup — at 100 TB these barriers are the stage outputs a
-        multi-stage pipeline persists to storage anyway), localCheckpoint
-        otherwise (local/test path). Lazy, like ``pipeline._barrier``: the
-        frame materializes inside its first consumer's job instead of a
-        count job of its own (the lineage is still cut for every later
-        consumer)."""
-        sc = documents.sparkSession.sparkContext
-        if sc.getCheckpointDir() is not None:
-            return df.checkpoint(eager=False)
-        return df.localCheckpoint(eager=False)
-
     doc_cols = documents.columns
     # r10: quality is a per-row projection — attach it as a column instead
     # of sort-merge-joining the corpus against itself on doc_id (2 Exchanges
@@ -799,7 +779,9 @@ def curate_pipeline(
     drops_quality = base.where(~is_bench & is_lowq).select(
         "doc_id", F.lit("quality").alias("drop_reason")
     )
-    s2 = _ckpt(base.where(~is_bench & ~is_lowq).select(*doc_cols))
+    # every survivor set feeds its drop branch AND the next stage, so each
+    # goes through session.barrier (measured 42 s -> 31 s at sf1)
+    s2 = barrier(base.where(~is_bench & ~is_lowq).select(*doc_cols))
 
     if gopher:
         from ictspark.extras.textstats import gopher_rules
@@ -808,7 +790,7 @@ def curate_pipeline(
         drops_gopher = gr.where(~F.col("pass_gopher")).select(
             "doc_id", F.lit("gopher").alias("drop_reason")
         )
-        s2 = _ckpt(s2.join(gr.where(F.col("pass_gopher")).select("doc_id"), "doc_id"))
+        s2 = barrier(s2.join(gr.where(F.col("pass_gopher")).select("doc_id"), "doc_id"))
 
     s2f = s2.withColumn("fp", F.md5(F.lower(F.trim("text"))))
     keepers = s2f.groupBy("fp").agg(F.min("doc_id").alias("keeper"))
@@ -816,7 +798,7 @@ def curate_pipeline(
     drops_exact = s2k.where(F.col("doc_id") != F.col("keeper")).select(
         "doc_id", F.lit("exact_dup").alias("drop_reason")
     )
-    s3 = _ckpt(s2k.where(F.col("doc_id") == F.col("keeper")).select(*doc_cols))
+    s3 = barrier(s2k.where(F.col("doc_id") == F.col("keeper")).select(*doc_cols))
 
     # only the non-singleton labels: a doc drops iff it is not the min id of
     # its component, and every other stage-3 survivor passes (anti-join
@@ -835,19 +817,19 @@ def curate_pipeline(
     # hit has two consumers (its drop branch + the s5 anti-join) like every
     # survivor frame — barrier it too, or the uncapped stage-4 shingle build
     # runs twice (code-review r06)
-    hit = _ckpt(
+    hit = barrier(
         shingles(s4, max_df=None)
         .join(bench_sh, "shingle")
         .select("doc_id")
         .distinct()
     )
     drops_cont = hit.select("doc_id", F.lit("contaminated").alias("drop_reason"))
-    s5 = _ckpt(s4.join(hit, "doc_id", "left_anti"))
+    s5 = barrier(s4.join(hit, "doc_id", "left_anti"))
 
     # barrier: mix (one narrow row per surviving doc) feeds BOTH the budget
     # drop branch and the s6 survivor join — without it the two-phase
     # prefix-sum plan runs once per consumer (the same rule as `hit`)
-    mix = _ckpt(mixture_plan(s5, budget_tokens, tokenizer=tokenizer))
+    mix = barrier(mixture_plan(s5, budget_tokens, tokenizer=tokenizer))
     drops_budget = mix.where(~F.col("keep")).select(
         "doc_id", F.lit("budget").alias("drop_reason")
     )
@@ -998,8 +980,8 @@ def dsir_weights(
     # scoring join), and the final groupBy(doc_id) rides the window's own
     # doc_id partitioning with no new Exchange. Two attempted "one pass"
     # rewrites lost: a (doc_id, b) pre-aggregation added an Exchange the
-    # original never pays (4.0 s vs 3.0 s sf1), and a localCheckpoint
-    # barrier on it materialized ~18M rows for nothing (7.7 s cold).
+    # original never pays (4.0 s vs 3.0 s sf1), and a session.barrier on
+    # it materialized ~18M rows for nothing (7.7 s cold).
     tf = dsir_feature_stream(target_docs, n_buckets)
     rf = dsir_feature_stream(raw_docs, n_buckets)
     tcnt = tf.groupBy("b").agg(F.count(F.lit(1)).alias("ct"))
@@ -1092,7 +1074,7 @@ def dsir_budget_prefix(d: DataFrame, budget_tokens: int) -> DataFrame:
     (see dsir_select docstring); output is invariant to the bucket
     boundaries because bucket order is score order and the cross-bucket
     offsets are exact."""
-    # r10 barrier (dedup._barrier): the per-doc weight frame — ONE narrow
+    # session.barrier: the per-doc weight frame — ONE narrow
     # row per scored doc — feeds THREE branches (the min/max extent agg,
     # the per-bucket token totals, and the residual window). For
     # dsir_select the frame is the whole dsir_weights DAG: un-materialized,
@@ -1100,9 +1082,7 @@ def dsir_budget_prefix(d: DataFrame, budget_tokens: int) -> DataFrame:
     # 12 parquet scans, zero ReusedExchange — the broadcast subtrees never
     # canonicalize equal). Measured: dsir_select 2.1 s → ~1.3 s warm at
     # sf0.1/32, and incr_dsir.select_read shares the same tail.
-    from ictspark.extras.dedup import _barrier
-
-    d = _barrier(d)
+    d = barrier(d)
     ext = d.agg(F.min("score").alias("smin"), F.max("score").alias("smax"))
     scale = F.when(
         F.col("smax") > F.col("smin"),

@@ -17,32 +17,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ictspark.session import barrier
+
 
 def _tokens(documents: DataFrame) -> DataFrame:
     return documents.select(
         "doc_id", F.posexplode(F.split(F.lower("text"), " ")).alias("pos", "token")
     ).where(F.col("token") != "")
-
-
-def _barrier(df: DataFrame) -> DataFrame:
-    """Materialization barrier for a small per-doc proxy frame (signatures,
-    fingerprints, k-gram occurrences) that is consumed MORE THAN ONCE —
-    both sides of a self-join, or several aggregation branches. Without it
-    the whole upstream chain executes once per consumer: ``mapInArrow``
-    stages do not canonicalize equal across plan branches (each call
-    pickles a fresh function object), so Spark's exchange reuse never
-    fires and the Python tokenize/hash pass runs per side (measured: the
-    minhash/simhash/winnow self-joins each carried TWO full signature
-    builds, r10 plans/). Guide §8.4: decide with small rows, and
-    materialize the proxy so re-attaching it cannot sneak the recompute
-    back in. A RELIABLE checkpoint when the session has one configured
-    (the real-cluster path — at 100 TB these proxy tables are the stage
-    outputs a pipeline persists anyway), localCheckpoint otherwise (the
-    curate_pipeline barrier rule)."""
-    sc = df.sparkSession.sparkContext
-    if sc.getCheckpointDir() is not None:
-        return df.checkpoint(eager=True)
-    return df.localCheckpoint(eager=True)
 
 
 MAX_SHINGLE_DF = 100  # document-frequency cap: shingles in more docs are dropped
@@ -372,16 +353,12 @@ def minhash_lsh_pairs(
             )
         k = r * bands
     r = k // bands
-    # r10 barrier: the signature frame (ONE narrow row per doc, k longs)
-    # feeds BOTH sides of the band self-join — and on the r > 1 path two
-    # more scoring joins. Un-materialized, every branch re-runs the whole
-    # mapInArrow tokenize+md5 pass (plans/r10/minhash_lsh_pairs_cur.txt:
-    # 2× MapInArrow, 2× df-cap Window, 2× signature agg; no exchange
-    # reuse across Python nodes). Measured: local wall ~flat at sf0.1/32
-    # (2.2 → 2.1 s warm; the duplicate chains ran CONCURRENTLY on idle
-    # cores) and −6% at sf1 — the real win is the HALVED per-byte Python
-    # hash work, which a busy 100 TB cluster pays for twice either way.
-    sig = _barrier(minhash_signatures(documents, k, max_df=max_df))
+    # session.barrier: the signature frame (ONE narrow row per doc, k
+    # longs) feeds BOTH sides of the band self-join — and on the r > 1 path
+    # two more scoring joins (plans/r10/minhash_lsh_pairs_cur.txt: 2×
+    # MapInArrow without it). −6% at sf1; the win is the HALVED Python
+    # hash work.
+    sig = barrier(minhash_signatures(documents, k, max_df=max_df))
     # ONE posexplode pass over the signature frame, not a bands-way union of
     # selects (r06): each union branch replayed the whole signature
     # aggregation — 42 auto-sized bands made that 42 shingle-groupBy jobs
@@ -584,10 +561,10 @@ def simhash_pairs(documents: DataFrame, max_hamming: int = SIMHASH_MAX_HAMMING) 
     docs (~10⁸ candidate pairs per chunk across ALL buckets — linear-ish),
     vs the old 16-bit/8-bit-chunk shape where each of 256 buckets held ~4 M
     docs and the join squared."""
-    # r10 barrier: TWO narrow longs per doc feed both sides of the
+    # session.barrier: TWO narrow longs per doc feed both sides of the
     # pigeonhole self-join; without it the mapInArrow signature stage runs
     # once per side (4 MapInArrow nodes in plans/r10/simhash_pairs_cur.txt).
-    s = _barrier(simhash(documents))
+    s = barrier(simhash(documents))
     n_chunks = max_hamming + 1
     chunk_bits = -(-N_SIMHASH_BITS // n_chunks)  # ceil
     # ONE posexplode pass over the signature frame, not an n_chunks-way union
@@ -655,11 +632,11 @@ def winnow_reuse_pairs(
             .where(F.col("df") <= max_df)
             .drop("df")
         )
-    # r10 barrier: the winnowed fingerprint index (~2/(w+1) of the k-gram
+    # session.barrier: the winnowed fingerprint index (~2/(w+1) of the k-gram
     # stream — the thinned proxy, exactly what a MOSS-style index stores)
     # feeds both sides of the self-join; un-materialized, the mapInArrow
     # winnowing pass and the df-cap window run once per side.
-    sel = _barrier(sel)
+    sel = barrier(sel)
     a, b = sel.alias("a"), sel.alias("b")
     return (
         a.join(b, (F.col("a.fp") == F.col("b.fp")) & (F.col("a.doc_id") < F.col("b.doc_id")))
@@ -872,12 +849,8 @@ def repeated_ngram_spans(
     merging is per-doc array math on collected duplicate starts (bounded
     by doc length, no window over the corpus). No cartesian anywhere.
     The occurrence set feeds BOTH the keeper agg and the join probe side —
-    a materialization barrier after the shingle build stops the declarative
-    double text-scan (measured 40.8 -> 18.5 s at sf1/32, same session):
-    a RELIABLE checkpoint when the session has one configured (the
-    real-cluster path — at 100 TB this is the stage output a pipeline
-    persists anyway), localCheckpoint otherwise (the curate_pipeline
-    barrier rule)."""
+    a ``session.barrier`` after the shingle build stops the declarative
+    double text-scan (measured 40.8 -> 18.5 s at sf1/32, same session)."""
     if min_span is None:
         min_span = k
     if k < 2:
@@ -885,7 +858,7 @@ def repeated_ngram_spans(
     if min_span < k:
         raise ValueError(f"min_span {min_span} < k {k}: spans are unions of k-windows")
     base, occs = _span_base(documents, k)
-    occs = _barrier(occs)  # ONE tokenize/shingle pass feeds keeper agg + probe
+    occs = barrier(occs)  # ONE tokenize/shingle pass feeds keeper agg + probe
     first = occs.groupBy("h").agg(
         F.min(F.struct("doc_id", "s")).alias("first"),
         F.count(F.lit(1)).alias("cnt"),

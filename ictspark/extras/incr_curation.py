@@ -72,6 +72,7 @@ from ictspark.extras.curation import (
     pack_sequences,
 )
 from ictspark.extras.dedup import LSH_THRESHOLD, shingles
+from ictspark.session import barrier
 
 
 def _bench_dir(store_dir: str, what: str) -> str:
@@ -232,9 +233,7 @@ def _decide(facts: DataFrame, all_pairs: DataFrame, params: dict) -> DataFrame:
     drops_exact = s2k.where(F.col("doc_id") != F.col("keeper")).select(
         "doc_id", F.lit("exact_dup").alias("drop_reason")
     )
-    s3 = s2k.where(F.col("doc_id") == F.col("keeper")).drop("keeper").localCheckpoint(
-        eager=True
-    )
+    s3 = barrier(s2k.where(F.col("doc_id") == F.col("keeper")).drop("keeper"))
     s3_ids = s3.select("doc_id")
     p3 = all_pairs.join(
         s3_ids.withColumnRenamed("doc_id", "doc_a"), "doc_a", "left_semi"
@@ -258,14 +257,12 @@ def _decide(facts: DataFrame, all_pairs: DataFrame, params: dict) -> DataFrame:
         labels = cc_railed(facts.sparkSession, s3_ids, sym, n_s3, n_sym)
     finally:
         sym.unpersist()
-    nd = keep_columns(labels).localCheckpoint(eager=True)
+    nd = barrier(keep_columns(labels), eager=True)
     labels.unpersist()
     drops_near = nd.where(~F.col("keep")).select(
         "doc_id", F.lit("near_dup").alias("drop_reason")
     )
-    s4 = s3.join(nd.where(F.col("keep")).select("doc_id"), "doc_id").localCheckpoint(
-        eager=True
-    )
+    s4 = barrier(s3.join(nd.where(F.col("keep")).select("doc_id"), "doc_id"))
     drops_cont = s4.where(F.col("contaminated")).select(
         "doc_id", F.lit("contaminated").alias("drop_reason")
     )

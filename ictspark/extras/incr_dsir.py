@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 
 from ictspark.extras import store
 from ictspark.extras.curation import DSIR_BUCKETS
+from ictspark.session import barrier
 
 DSIR_STORE_FORMAT = "d1"
 
@@ -153,7 +154,7 @@ def ingest_batch(batch_docs: DataFrame, store_dir: str, batch_id: str) -> dict:
             F.lit(0).cast("bigint").alias("c"),
         )
     )
-    feats = real.unionByName(sentinels).localCheckpoint(eager=True)
+    feats = barrier(real.unionByName(sentinels))
     feats.write.mode("overwrite").parquet(store.part(store_dir, "feats", batch_id))
     (
         feats.where(F.col("b") >= 0)
@@ -163,7 +164,6 @@ def ingest_batch(batch_docs: DataFrame, store_dir: str, batch_id: str) -> dict:
         .parquet(store.part(store_dir, "delta", batch_id))
     )
     n_feat_rows = feats.where(F.col("b") >= 0).count()
-    feats.unpersist()
     batch.journal.commit(
         batch_id,
         rows=batch.n,

@@ -51,6 +51,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ictspark.extras import store
+from ictspark.session import barrier
 
 PARA_STORE_FORMAT = "p1"
 
@@ -90,7 +91,7 @@ def ingest_batch(batch_docs: DataFrame, store_dir: str, batch_id: str) -> dict:
         stored_docs = store.read_parts(spark, store_dir, "docs", prior, _DOC_SCHEMA)
         store.reject_repush(batch_docs, stored_docs, batch_id)
     t0 = time.time()
-    segs = _segments(batch_docs).localCheckpoint(eager=True)  # ONE text pass
+    segs = barrier(_segments(batch_docs))  # ONE text pass
     segs.write.mode("overwrite").parquet(store.part(store_dir, "occ", batch_id))
     # batch-local keeper mins: one narrow row per distinct hash in the
     # batch — within-batch duplicate mass collapses here, at ingest
@@ -109,7 +110,6 @@ def ingest_batch(batch_docs: DataFrame, store_dir: str, batch_id: str) -> dict:
         .parquet(store.part(store_dir, "docs", batch_id))
     )
     n_occ = segs.count()
-    segs.unpersist()
     batch.journal.commit(
         batch_id,
         rows=batch.n,

@@ -53,6 +53,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ictspark.extras import store
+from ictspark.session import barrier
 
 SPAN_STORE_FORMAT = "s1"
 
@@ -94,7 +95,7 @@ def ingest_batch(
         store.reject_repush(batch_docs, stored_docs, batch_id)
     t0 = time.time()
     base, occs = _span_base(batch_docs, k)
-    occs = occs.localCheckpoint(eager=True)  # ONE tokenize pass feeds both writes
+    occs = barrier(occs)  # ONE tokenize pass feeds both writes
     occs.write.mode("overwrite").parquet(store.part(store_dir, "occ", batch_id))
     (
         occs.groupBy("h")
@@ -107,7 +108,6 @@ def ingest_batch(
         "overwrite"
     ).parquet(store.part(store_dir, "docs", batch_id))
     n_occ = occs.count()
-    occs.unpersist()
     batch.journal.commit(
         batch_id,
         rows=batch.n,

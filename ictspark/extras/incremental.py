@@ -84,6 +84,7 @@ from ictspark.extras.dedup import (
     minhash_rows_for,
     minhash_signatures,
 )
+from ictspark.session import barrier
 
 # Store format version — recorded in every journal commit and folded into the
 # demo-store content key (ADVICE r07): a code change to the store layout or
@@ -597,7 +598,7 @@ def full_recompute(documents: DataFrame, threshold: float = LSH_THRESHOLD) -> Da
         sym.unpersist()
     from ictspark.extras.curation import keep_columns
 
-    out = keep_columns(labels).localCheckpoint(eager=True)
+    out = barrier(keep_columns(labels), eager=True)
     labels.unpersist()
     return out
 

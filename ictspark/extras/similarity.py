@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ictspark.session import barrier
+
 N_QUERIES = 10  # vec_id < 10 are the query set
 TOP_K = 5
 SIGN_BITS = 8
@@ -589,14 +591,10 @@ def embedding_dup_pairs(
     # to the former srp_bit_array/srp_keys_from_bits projections (which the
     # sizing tests still pin against this path)
     buckets = _srp_buckets_arrow(e, rows, bands)
-    # r10 barrier (dedup._barrier): the band-bucket frame — bands narrow
-    # rows per vector — feeds both sides of the self-join; mapInArrow
-    # stages never canonicalize equal across plan branches, so without the
-    # barrier the NumPy projection pass ran once per side (4 MapInArrow
-    # nodes in plans/r10/embedding_dup_pairs_sized_after.txt pre-barrier).
-    from ictspark.extras.dedup import _barrier
-
-    buckets = _barrier(buckets)
+    # session.barrier: the band-bucket frame — bands narrow rows per
+    # vector — feeds both sides of the self-join (4 MapInArrow nodes in
+    # plans/r10/embedding_dup_pairs_sized_after.txt without it).
+    buckets = barrier(buckets)
     a, c = buckets.alias("a"), buckets.alias("b")
     cand = (
         a.join(

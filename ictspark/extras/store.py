@@ -28,6 +28,7 @@ identity checks (sizing, pinned tables, init params).
 
 from __future__ import annotations
 
+import atexit
 import hashlib
 import os
 import shutil
@@ -236,6 +237,9 @@ def ingest_stream(
     )
 
 
+_DEMO_DIRS: set[str] = set()  # this process's demo stores, removed at exit
+
+
 def demo_store(
     name: str,
     docs: DataFrame,
@@ -249,17 +253,20 @@ def demo_store(
     batches (``b000``…) and return the store dir. The dir is deterministic
     in (name, content signature, ``key`` — params and store format — and
     pid): a re-run on the same corpus in the same process re-enters the same
-    store and every ingest is an idempotent journal skip, instead of leaving
-    one store per run under /tmp; the format tag keeps a layout change from
-    reading a stale store; the pid keeps concurrent processes apart (the
-    journal append and parquet overwrite have no cross-process locking).
-    ``init`` initializes stores that carry an ``__init__`` identity."""
+    store and every ingest is an idempotent journal skip; the format tag
+    keeps a layout change from reading a stale store; the pid keeps
+    concurrent processes apart (the journal append and parquet overwrite
+    have no cross-process locking), and the dir is removed when the process
+    exits. ``init`` initializes stores that carry an ``__init__`` identity."""
     sig = input_sig(docs, id_col, *content)[2]
     tag = "|".join(map(str, (sig, DEMO_BATCHES, *key, f"pid{os.getpid()}")))
     store_dir = os.path.join(
         tempfile.gettempdir(),
         f"ictspark_{name}_demo_{hashlib.md5(tag.encode()).hexdigest()[:12]}",
     )
+    if store_dir not in _DEMO_DIRS:
+        _DEMO_DIRS.add(store_dir)
+        atexit.register(shutil.rmtree, store_dir, ignore_errors=True)
     if init is not None:
         init(store_dir)
     for i in range(DEMO_BATCHES):

@@ -20,51 +20,15 @@ from pyspark.sql import functions as F
 
 from ictspark import aggregates as A
 from ictspark import enrich, parse
-
-
-def _barrier(df: DataFrame) -> DataFrame:
-    """Materialization barrier that also TRUNCATES LINEAGE (r10, guide §7.3
-    "driver thread dumps → planning time" + §5 localCheckpoint): `persist`
-    kept the full parse+window logical plan under every cached table, so
-    each fresh report DataFrame re-paid ~0.5-1 s of driver-side catalyst
-    analysis over that lineage before touching the (already cached) rows —
-    measured fresh-plan yields().collect() 1.3-1.5 s vs 0.06 s re-collect
-    of the same object at sf0.1/32; with the barrier the same call is
-    0.56-0.72 s. Lazy (eager=False): the first action — ReportSet
-    .materialize()'s counts, which the bench times — still performs the
-    materialization work, exactly like persist. A RELIABLE checkpoint when
-    the session has one configured (the real-cluster path, where these are
-    the stage outputs a pipeline persists anyway); localCheckpoint
-    otherwise (local/bench path — fault-tolerance of a rerunnable local
-    intermediate is not critical). Checkpoint storage is released by the
-    ContextCleaner when the ReportSet is dropped; unpersist() stays a
-    safe no-op on these frames.
-
-    Storage level DISK_ONLY, deliberately (r10, measured): the default
-    MEMORY_AND_DISK holds the checkpointed rows DESERIALIZED in the
-    unified memory pool's protected storage region, where — unlike a
-    persist()'s evictable cache — repeated ReportSet construction (the
-    bench's best-of-3 reps; the scaling job's warmup+reps) accumulates
-    them (unpersist is a no-op on checkpoints) until aggregation tasks
-    hit SparkOutOfMemoryError UNABLE_TO_ACQUIRE_MEMORY — reproduced at
-    sf4/local[32] in scripts/_scaling_job.py. DISK_ONLY keeps the
-    blocks out of the memory pool entirely at ANY scale factor; reads
-    stream back through the OS page cache (sf0.1 bench e2e measured
-    unchanged, sf4 scaling job green again)."""
-    sc = df.sparkSession.sparkContext
-    if sc.getCheckpointDir() is not None:
-        return df.checkpoint(eager=False)
-    from pyspark import StorageLevel
-
-    return df.localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+from ictspark.session import barrier
 
 
 class ReportSet:
     def __init__(self, transcripts: DataFrame, tool_dim: DataFrame) -> None:
         self.tool_dim = tool_dim
-        self.steps_a = _barrier(A.with_attempt(parse.parse_steps(transcripts)))
-        self.runs = _barrier(A.runs(self.steps_a))
-        self.fails = _barrier(self.steps_a.where(F.col("status") != "pass"))
+        self.steps_a = barrier(A.with_attempt(parse.parse_steps(transcripts)))
+        self.runs = barrier(A.runs(self.steps_a))
+        self.fails = barrier(self.steps_a.where(F.col("status") != "pass"))
         self._product_runs: DataFrame | None = None  # lazy, see product_reports()
 
     def materialize(self) -> dict[str, int]:
@@ -158,7 +122,7 @@ class ReportSet:
 
         es = self.enriched()
         if self._product_runs is None:
-            self._product_runs = _barrier(PR.product_runs(es))
+            self._product_runs = barrier(PR.product_runs(es))
         return {
             "product_hourly": PR.product_hourly(es, runs=self._product_runs),
             "product_daily_failures": PR.product_daily_failures(es),

@@ -2,14 +2,15 @@
 
 AQE on (runtime re-plan + skew-join splitting), adaptive partition coalescing,
 UTC session timezone (SEMANTICS.md formatting parity), Arrow enabled for the
-mapInArrow parse variant.
+mapInArrow parse variant. ``barrier`` is the one materialization policy.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, SparkSession
 
 
 def shuffle_partitions_for(cores: int, cluster: bool | None = None) -> int:
@@ -70,3 +71,35 @@ def get_spark(
     for k, v in (extra or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def barrier(df: DataFrame, eager: bool = False) -> DataFrame:
+    """The one materialization barrier: materialize ``df`` once and cut its
+    lineage, for every module.
+
+    - Lineage truncation: a cached frame keeps its full logical plan, so
+      each fresh DataFrame over it re-pays driver-side analysis of that
+      plan (measured 1.3-1.5 s vs 0.56-0.72 s for a fresh-plan
+      ``yields().collect()`` at sf0.1/32, r10).
+    - A proxy with several consumers (both sides of a self-join, a drop
+      branch plus the next stage) must be materialized: ``mapInArrow``
+      stages never canonicalize equal across plan branches, so exchange
+      reuse never fires and the upstream Python pass re-runs per consumer.
+    - ``DISK_ONLY``: checkpoint blocks are not evictable and
+      ``unpersist()`` cannot release them, so in the memory pool they
+      accumulate across calls until aggregation tasks fail with
+      ``UNABLE_TO_ACQUIRE_MEMORY`` (reproduced at sf4/local[32] in
+      scripts/_scaling_job.py). On disk they stream back through the OS
+      page cache; the ContextCleaner drops them once the frame is
+      unreferenced.
+    - A reliable ``checkpoint`` when the session has a checkpoint dir (the
+      cluster path: local-checkpoint blocks die with their executor).
+    - ``unpersist()`` on the returned frame is a no-op.
+
+    Lazy by default: the first action materializes the frame inside its
+    own job. ``eager=True`` only where the next line releases a cache the
+    barrier reads (a persisted input, a CC loop's labels); lazily, that
+    release would make the first action recompute them from scratch."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint(eager=eager)
+    return df.localCheckpoint(eager=eager, storageLevel=StorageLevel.DISK_ONLY)

@@ -2,6 +2,8 @@
 store gets from the one battery."""
 
 import os
+import subprocess
+import sys
 
 import pytest
 from pyspark.sql import functions as F
@@ -30,3 +32,32 @@ def test_foreign_format_init_refused(spark, tmp_path_factory):
         with pytest.raises(ValueError, match="store-format"):
             mod.ingest_batch(docs.where(F.col("doc_id") == 2), store, "b0")
         assert Journal(store).batches == []
+
+
+def test_demo_store_removed_at_exit(tmp_path, smoke_sf_dir):
+    """A ``*_demo`` entry's store dir lives as long as its process: a process
+    that answers a ``*_incremental`` query must not leave its store behind
+    in the temp dir."""
+    code = (
+        "import glob, os, sys, tempfile\n"
+        "from ictspark import io\n"
+        "from ictspark.extras import incr_spans\n"
+        "from ictspark.session import get_spark\n"
+        "spark = get_spark(cpus=1, shuffle_partitions=2)\n"
+        "docs = io.load_table(spark, sys.argv[1], 'documents')\n"
+        "incr_spans.incremental_spans_demo(spark, docs).collect()\n"
+        "print(*glob.glob(os.path.join(tempfile.gettempdir(), 'ictspark_*_demo_*')))\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    run = subprocess.run(
+        [sys.executable, "-c", code, smoke_sf_dir],
+        cwd=root,
+        env={**os.environ, "TMPDIR": str(tmp_path)},
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert run.returncode == 0, run.stderr[-2000:]
+    dirs = run.stdout.split()
+    assert dirs and all(d.startswith(str(tmp_path)) for d in dirs), run.stdout
+    assert [d for d in dirs if os.path.exists(d)] == []
