@@ -8,36 +8,38 @@ scan from `last_log − 5 s`, dedupe on push, recompute stats
 - unit of work = one `day` partition (the reference's date-named log dirs);
 - `_lineage.jsonl` records one row per partition event: rows, duration, wall
   time — the north_rule's "per-partition lineage + metrics". It is genuinely
-  append-only (O_APPEND + fsync per line), so an N-partition backfill is O(N)
-  file I/O;
-- a CLOSED partition is committed atomically AFTER its routed write succeeds;
-  resume skips committed partitions (no reprocessing), reprocesses anything
-  else — idempotent because each partition write is a full overwrite of that
-  partition's directories and ingest dedupes on (conv_id, turn_idx) (T4);
+  append-only (O_APPEND + fsync per line), so an N-day ingest is O(N) file
+  I/O;
+- each cycle deletes the uncommitted day dirs, then writes every uncommitted
+  day in ONE partitioned write (`partitionBy("day", "route_key")` with
+  dynamic partition overwrite, so committed days on disk are untouched).
+  CLOSED days are committed one at a time AFTER that write, from one grouped
+  footer count; resume skips committed days and rewrites everything else —
+  idempotent because uncommitted dirs are disposable and ingest dedupes on
+  (conv_id, turn_idx) (T4);
 - the watermark-overlap semantics (T2: rescan from last_log − 5 s): the most
   recent day present in the input is treated as STILL OPEN — it is written
   every cycle but never committed, so rows that arrive for it later are picked
   up by the next cycle's rewrite. Pass ``commit_open_day=True`` for a
-  known-complete backfill where the last day should close too. Committed days
+  known-complete backlog where the last day should close too. Committed days
   are immutable by protocol: a row arriving for an already-committed day is
   dropped (the reference likewise never re-reads files older than its
   watermark overlap);
 - dedupe on (conv_id, turn_idx) runs ONCE over the whole uncommitted slice
   (not per-day), so duplicate keys whose timestamps straddle an uncommitted
-  day boundary cannot double-count; the slice is persisted so the dedupe
-  window is computed once, not once per day.
+  day boundary cannot double-count.
 
 At cluster scale the same protocol runs with Iceberg: the routed write becomes
-an atomic REPLACE of the day partition and _lineage a table; the driver loop
-stays identical.
+an atomic REPLACE of the uncommitted day partitions and _lineage a table; the
+driver loop stays identical.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -104,8 +106,8 @@ class Lineage:
 
 def committed_partitions(entries: list[dict]) -> set[str]:
     """THE definition of 'committed' — one predicate shared by
-    Lineage.committed() and both entry points (which parse the journal once
-    and pass the entries around)."""
+    Lineage.committed() and run_incremental (which parses the journal once
+    and passes the entries around)."""
     return {e["partition"] for e in entries if e.get("status") == "committed"}
 
 
@@ -165,7 +167,7 @@ def _last_open_event(entries: list[dict], day: str) -> dict | None:
 
 def _record_skipped_committed(
     lin: Lineage, day_counts: dict[str, int], day_sigs: dict[str, str],
-    done: set[str], mode: str, entries: list[dict] | None = None,
+    done: set[str], entries: list[dict] | None = None,
 ) -> None:
     """Observability for the committed-day immutability rule (ADVICE r02):
     input rows whose day is already committed are dropped — by protocol, not
@@ -196,7 +198,7 @@ def _record_skipped_committed(
                     "at": time.time(),
                     "rows": n,
                     "duration_s": 0.0,
-                    "mode": mode,
+                    "mode": "incremental",
                     # same keys as commit/open events — lineage rows stay
                     # schema-homogeneous for lineage_metrics
                     "input_rows": n,
@@ -212,15 +214,15 @@ def run_incremental(
     out_dir: str,
     ck_dir: str,
     fail_after: int | None = None,
-    on_partition: Callable[[str], None] | None = None,
     commit_open_day: bool = False,
 ) -> list[str]:
-    """Process all uncommitted day partitions; returns the days processed.
+    """Process all uncommitted day partitions in ONE partitioned write (a
+    365-day backlog is one write, not 365); returns the days processed.
 
     The max day in the input is treated as still open (written, not
-    committed) unless commit_open_day=True. fail_after=k aborts after k
-    commits (test hook simulating a mid-run crash); resume = call again with
-    the same ck_dir.
+    committed) unless commit_open_day=True. fail_after=k aborts before
+    commit k+1 (test hook simulating a crash after the write); resume = call
+    again with the same ck_dir.
     """
     lin = Lineage(ck_dir)
     lin_entries = lin.entries()  # parsed once; committed + skip-dedupe share it
@@ -253,114 +255,29 @@ def run_incremental(
             and last.get("input_sig") == day_sigs[open_day]
         ):
             todo = []
-    _record_skipped_committed(lin, day_counts, day_sigs, done, "incremental", entries=lin_entries)
+    _record_skipped_committed(lin, day_counts, day_sigs, done, entries=lin_entries)
     if not todo:
         return []
-    # T4: ONE dedupe over the whole uncommitted slice — duplicate
-    # (conv_id, turn_idx) keys cannot double-count across uncommitted day
-    # boundaries, and the window shuffle runs once, not once per day.
     from ictspark.io import dedupe_transcripts
     from ictspark.snapshots import SnapshotLog, snapshot_day_write
 
-    slog = SnapshotLog(ck_dir)
-    batch = dedupe_transcripts(t.where(F.col("_day").isin(todo))).persist()
-    processed: list[str] = []
-    n_commits = 0
-    try:
-        for day in todo:
-            if fail_after is not None and n_commits >= fail_after:
-                raise RuntimeError(f"injected failure before partition {day}")
-            t0 = time.time()
-            day_rows = batch.where(F.col("_day") == day).drop("_day")
-            # NOTE: no attempt ranking here — attempt is a conv-scoped window,
-            # and a conv can span partition boundaries; ranking inside one day
-            # would be wrong. The routed store holds per-row parse+enrich
-            # output only; windows/aggregates run at report time over the full
-            # store (the reference likewise recomputes all stats after each
-            # ingest batch, main.rs:691-694).
-            steps = parse.parse_steps(day_rows)
-            routed = enrich.enrich_steps(steps, tool_dim).repartition(F.col("route_key"))
-            path = _routed_day_path(out_dir, day)
-            routed.write.mode("overwrite").partitionBy("route_key").parquet(path)
-            # row count from the committed bytes (parquet footer metadata) —
-            # no second parse+enrich pass. Explicit schema: a day whose rows
-            # were ALL newer-day duplicates writes zero data files, and a
-            # schema-less read of an empty directory would throw and wedge
-            # resume on that day forever.
-            n = spark.read.schema(routed.schema).parquet(path).count()
-            # "mode" keeps lineage rows schema-homogeneous across entry points
-            # (createDataFrame over mixed-key dicts would fail in metrics)
-            # snapshot lineage (Iceberg commit analog): which files this
-            # write added — the open day's rewrite records as a REPLACE
-            snapshot_day_write(slog, out_dir, day)
-            metrics = {
-                "rows": int(n),
-                "duration_s": round(time.time() - t0, 3),
-                "mode": "incremental",
-                "input_rows": int(day_counts[day]),
-                "input_sig": day_sigs[day],
-            }
-            if day == open_day:
-                lin.mark_open(day, **metrics)
-            else:
-                lin.commit(day, **metrics)
-                n_commits += 1
-            processed.append(day)
-            if on_partition:
-                on_partition(day)
-    finally:
-        batch.unpersist()
-    return processed
-
-
-def backfill(
-    spark: SparkSession,
-    transcripts: DataFrame,
-    tool_dim: DataFrame,
-    out_dir: str,
-    ck_dir: str,
-    commit_open_day: bool = False,
-) -> list[str]:
-    """Cold-start ingest: ONE partitioned write covers every uncommitted day
-    instead of one Spark job per day (a 365-day backlog is 1 job, not 365).
-
-    Dynamic partition overwrite replaces only the (day, route_key) partitions
-    present in the batch — committed days on disk are untouched, so the write
-    is idempotent and a crash before the commit loop simply reruns. Lineage
-    commits happen per day AFTER the write succeeds, from footer-metadata
-    counts; the open (max) day is written but left uncommitted exactly as in
-    run_incremental. The two entry points share layout and lineage, so a
-    backfill can be continued by run_incremental cycles and vice versa.
-
-    Uncommitted on-disk day dirs are DELETED before the write (ADVICE r02
-    medium): dynamic overwrite only replaces partitions present in the current
-    batch, so a day written open by an earlier cycle would otherwise keep
-    stale files when its rows are later deduped away to a newer day (or a
-    route_key vanishes) — and the stale dir would then be committed with stale
-    non-zero counts, double-counting against the rows' newer-day copies.
-    Todo days are uncommitted by definition, so their on-disk state is
-    disposable; committed days are never touched.
-    """
-    import shutil
-
-    lin = Lineage(ck_dir)
-    lin_entries = lin.entries()
-    done = committed_partitions(lin_entries)
-    t = transcripts.withColumn("_day", F.date_format(F.to_date("ts"), "yyyy-MM-dd"))
-    day_counts, day_sigs = _day_stats(t)
-    days = sorted(day_counts)
-    open_day = days[-1] if days and not commit_open_day else None
-    todo = [d for d in days if d not in done]
-    _record_skipped_committed(lin, day_counts, day_sigs, done, "backfill", entries=lin_entries)
-    if not todo:
-        return []
-    from ictspark.io import dedupe_transcripts
-
     t0 = time.time()
+    # dynamic partition overwrite only replaces the (day, route_key)
+    # partitions present in the batch: a day written open by an earlier cycle
+    # would keep stale files when its rows are later deduped away to a newer
+    # day (or a route_key vanishes), and be committed with stale non-zero
+    # counts. Uncommitted days are disposable; committed days are never touched.
     for day in todo:
         stale = _routed_day_path(out_dir, day)
         if os.path.isdir(stale):
             shutil.rmtree(stale)
+    # T4: ONE dedupe over the whole uncommitted slice — duplicate
+    # (conv_id, turn_idx) keys cannot double-count across uncommitted day
+    # boundaries. No attempt ranking here — attempt is a conv-scoped window
+    # and a conv can span days. The routed store holds per-row parse+enrich
+    # output only; windows/aggregates run at report time over the full store
+    # (the reference likewise recomputes all stats after each ingest batch,
+    # main.rs:691-694).
     batch = dedupe_transcripts(t.where(F.col("_day").isin(todo)))
     steps = parse.parse_steps(batch.drop("_day"))
     routed = (
@@ -375,10 +292,10 @@ def backfill(
         .parquet(out_dir)
     )
     wall = round(time.time() - t0, 3)
-    # per-day row counts from the committed bytes (footer metadata only). A
-    # todo day whose rows were ALL newer-day duplicates writes no directory —
-    # skip the missing path and commit it with rows=0 (its rows live in the
-    # newer day), instead of failing the read forever.
+    # per-day row counts from the written bytes (footer metadata only) — no
+    # second parse+enrich pass. A todo day whose rows were ALL newer-day
+    # duplicates writes no directory: it commits with rows=0 (its rows live
+    # in the newer day) instead of failing the read forever.
     written = [d for d in todo if os.path.isdir(_routed_day_path(out_dir, d))]
     counts: dict[str, int] = {}
     if written:
@@ -390,15 +307,20 @@ def backfill(
             .agg(F.count(F.lit(1)).alias("n"))
             .collect()
         }
-    from ictspark.snapshots import SnapshotLog, snapshot_day_write
-
     slog = SnapshotLog(ck_dir)
+    n_commits = 0
     for day in todo:
+        if fail_after is not None and n_commits >= fail_after:
+            raise RuntimeError(f"injected failure before partition {day}")
+        # snapshot lineage (Iceberg commit analog): which files this write
+        # added — the open day's rewrite records as a REPLACE
         snapshot_day_write(slog, out_dir, day)
         metrics = {
             "rows": int(counts.get(day, 0)),
             "duration_s": wall,
-            "mode": "backfill",
+            # "mode" keeps lineage rows schema-homogeneous (createDataFrame
+            # over mixed-key dicts would fail in lineage_metrics)
+            "mode": "incremental",
             "input_rows": int(day_counts[day]),
             "input_sig": day_sigs[day],
         }
@@ -406,17 +328,22 @@ def backfill(
             lin.mark_open(day, **metrics)
         else:
             lin.commit(day, **metrics)
+            n_commits += 1
     return todo
 
 
 def read_all_routed(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Full routed store.
+    """Full routed store: every day on disk, committed or not.
 
-    Consumer caveat (committed-day immutability, ADVICE r02): a duplicate
-    (conv_id, turn_idx) key whose OLDER copy lives in an already-committed day
-    is kept in BOTH days — ingest dedupe spans only the uncommitted slice, and
-    committed days are immutable by protocol. The drop of the would-be rewrite
-    is recorded as `skipped_committed` lineage events (see
+    Days missing from ``Lineage.committed()`` are visible and may still
+    change: the open day (rewritten each cycle), and after a crash, closed
+    days that were written but not yet committed (rewritten on resume).
+    Consumers that need final data filter ``day`` on the committed set.
+
+    Committed-day immutability (ADVICE r02): a duplicate (conv_id, turn_idx)
+    key whose OLDER copy lives in an already-committed day is kept in BOTH
+    days — ingest dedupe spans only the uncommitted slice. The dropped
+    rewrite is recorded as `skipped_committed` lineage events (see
     _record_skipped_committed); consumers needing strict one-copy semantics
     over a store with re-pushed history should apply io.dedupe_transcripts on
     read (it is the same newest-wins window)."""

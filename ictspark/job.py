@@ -6,7 +6,9 @@
 Modes:
   batch        full parse → enrich → route → aggregate; writes routed store +
                report tables under --out
-  incremental  checkpointed day-partition ingest with lineage (resumable)
+  incremental  checkpointed day-partition ingest with lineage (resumable):
+               each cycle writes every uncommitted day in one partitioned
+               write, then commits the closed days
   changes      snapshot-based incremental read (Iceberg commit-lineage analog):
                what did commits after --after add/replace? (consumer side)
   yield-stream Structured Streaming run-grain yield: drain a transcripts file
@@ -59,12 +61,13 @@ def cmd_incremental(args: argparse.Namespace) -> None:
     reference's AutoUpdate loop (poll every 30 s, main.rs:247-310) — each
     cycle RE-LISTS the input directory, so files that arrived since the last
     cycle are picked up, committed days are skipped via the checkpoint, and
-    the still-open day is rewritten."""
+    every uncommitted day (the still-open one included) is rewritten in one
+    write. A cold start over a long backlog is the same call; add
+    --commit-open-day when the backlog is known complete."""
     from ictspark import checkpoint as CK
 
     spark = _spark()
     tool_dim = spark.read.parquet(args.tool_dim)
-    fn = CK.backfill if args.backfill else CK.run_incremental
     cycles: list[list[str]] = []
     for i in range(max(1, args.cycles)):
         if i > 0 and args.poll_seconds > 0:
@@ -72,7 +75,7 @@ def cmd_incremental(args: argparse.Namespace) -> None:
         # fresh read per cycle: re-list the directory (new files visible)
         t = spark.read.parquet(args.transcripts)
         cycles.append(
-            fn(
+            CK.run_incremental(
                 spark,
                 t,
                 tool_dim,
@@ -88,7 +91,7 @@ def cmd_incremental(args: argparse.Namespace) -> None:
     print(
         json.dumps(
             {
-                "mode": "backfill" if args.backfill else "incremental",
+                "mode": "incremental",
                 "cycles": len(cycles),
                 "partitions_processed": flat,
                 "cycles_processed": cycles,
@@ -228,9 +231,8 @@ def main(argv: list[str] | None = None) -> None:
         if name == "incremental":
             s.add_argument("--checkpoint", required=True)
             # continuous mode leaves the max day open (rewritten next cycle);
-            # set this for a known-complete backfill so the last day closes too
+            # set this for a known-complete backlog so the last day closes too
             s.add_argument("--commit-open-day", action="store_true")
-            s.add_argument("--backfill", action="store_true")
             # AutoUpdate loop analog (main.rs:251: 30 s poll)
             s.add_argument("--cycles", type=int, default=1)
             s.add_argument("--poll-seconds", type=float, default=0.0)

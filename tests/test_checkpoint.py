@@ -1,6 +1,7 @@
 """Incremental/checkpoint tests (SURVEY.md §5.4): resume-from-checkpoint equals
 cold run; committed partitions are not reprocessed."""
 
+import os
 import tempfile
 
 import pytest
@@ -28,15 +29,23 @@ def test_incremental_equals_cold(spark, smoke_sf_dir):
         assert got.select(*exp.columns).exceptAll(exp).count() == 0
 
 
-def test_resume_after_crash(spark, smoke_sf_dir):
+@pytest.mark.parametrize("fail_after", [0, 2])
+def test_resume_after_crash(spark, smoke_sf_dir, fail_after):
+    """A crash between the one write and commit k+1: every day is already on
+    disk, only k are committed; resume rewrites the rest exactly once."""
     t = io.load_transcripts(spark, smoke_sf_dir)
     tool_dim, _ = io.load_dims(spark, smoke_sf_dir)
+    day = F.date_format(F.to_date("ts"), "yyyy-MM-dd")
+    days = sorted(r["d"] for r in t.select(day.alias("d")).dropna().distinct().collect())
     with tempfile.TemporaryDirectory() as d:
         with pytest.raises(RuntimeError, match="injected failure"):
-            CK.run_incremental(spark, t, tool_dim, f"{d}/out", f"{d}/ck", fail_after=2)
+            CK.run_incremental(
+                spark, t, tool_dim, f"{d}/out", f"{d}/ck", fail_after=fail_after
+            )
         lin = CK.Lineage(f"{d}/ck")
         committed_before = lin.committed()
-        assert len(committed_before) == 2
+        assert len(committed_before) == fail_after
+        assert all(os.path.isdir(f"{d}/out/day={day}") for day in days)
         # resume: must process ONLY the remaining partitions
         processed = CK.run_incremental(spark, t, tool_dim, f"{d}/out", f"{d}/ck")
         assert set(processed).isdisjoint(committed_before)
@@ -44,6 +53,7 @@ def test_resume_after_crash(spark, smoke_sf_dir):
         # partition — they record re-pushed input for committed days)
         parts = [e["partition"] for e in lin.entries() if e.get("status") == "committed"]
         assert len(parts) == len(set(parts))
+        assert set(parts) == set(days[:-1])  # every closed day, open day not
         # final state equals cold run. Multiset equality via |A|==|B| and
         # A∖B==∅ (the reverse exceptAll trips a Spark 4.1 internal bug —
         # INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND — on this join+generate plan).
@@ -51,6 +61,33 @@ def test_resume_after_crash(spark, smoke_sf_dir):
         exp = _cold_routed(spark, smoke_sf_dir)
         assert got.count() == exp.count()
         assert got.select(*exp.columns).exceptAll(exp).count() == 0
+
+
+def test_ingest_cycle_job_count_pinned(spark, smoke_sf_dir):
+    """Spark jobs of one ingest cycle over two uncommitted days, read from
+    the status tracker before and after (the counting of
+    test_curate_pipeline_job_count_pinned): day stats, the one partitioned
+    write and the grouped footer count. A job per day fails here."""
+    t = io.load_transcripts(spark, smoke_sf_dir)
+    tool_dim, _ = io.load_dims(spark, smoke_sf_dir)
+    first_two = [
+        r["d"] for r in t.select(F.to_date("ts").alias("d")).dropna().distinct()
+        .orderBy("d").limit(2).collect()
+    ]
+    two_days = t.where(F.to_date("ts").isin(first_two))
+    sc = spark.sparkContext
+    tracker, bus = sc.statusTracker(), sc._jsc.sc().listenerBus()
+
+    def job_ids() -> set[int]:
+        bus.waitUntilEmpty()
+        return set(tracker.getJobIdsForGroup())
+
+    with tempfile.TemporaryDirectory() as d:
+        before = job_ids()
+        processed = CK.run_incremental(spark, two_days, tool_dim, f"{d}/out", f"{d}/ck")
+        after = job_ids()
+    assert len(processed) == 2
+    assert len(after - before) == 9, len(after - before)
 
 
 def test_lineage_metrics(spark, smoke_sf_dir):
@@ -82,7 +119,7 @@ def test_report_from_store_matches_direct(spark, smoke_sf_dir):
 
 def test_idempotent_rerun(spark, smoke_sf_dir):
     """Rerun reprocesses ONLY the still-open (max) day; with
-    commit_open_day=True (known-complete backfill) it is a full no-op."""
+    commit_open_day=True (known-complete backlog) it is a full no-op."""
     t = io.load_transcripts(spark, smoke_sf_dir)
     tool_dim, _ = io.load_dims(spark, smoke_sf_dir)
     with tempfile.TemporaryDirectory() as d:
@@ -141,14 +178,14 @@ def test_lineage_tolerates_torn_tail(spark, smoke_sf_dir):
         assert any(e.get("partition") == "x" for e in lin.entries())
 
 
-def test_backfill_equals_cold_and_interops(spark, smoke_sf_dir):
-    """One-write backfill == cold run; lineage commits every closed day; a
-    later run_incremental cycle continues from the same checkpoint (only the
-    open day is reprocessed)."""
+def test_cold_start_equals_cold_and_continues(spark, smoke_sf_dir):
+    """A cold start over the whole backlog (one write) == cold run; lineage
+    commits every closed day; a later cycle continues from the same
+    checkpoint (only the open day is reprocessed)."""
     t = io.load_transcripts(spark, smoke_sf_dir)
     tool_dim, _ = io.load_dims(spark, smoke_sf_dir)
     with tempfile.TemporaryDirectory() as d:
-        processed = CK.backfill(spark, t, tool_dim, f"{d}/out", f"{d}/ck")
+        processed = CK.run_incremental(spark, t, tool_dim, f"{d}/out", f"{d}/ck")
         assert len(processed) > 2
         got = CK.read_all_routed(spark, f"{d}/out").drop("day")
         exp = _cold_routed(spark, smoke_sf_dir)
@@ -167,8 +204,8 @@ def test_backfill_equals_cold_and_interops(spark, smoke_sf_dir):
         assert got2.count() == exp.count()
 
 
-def test_backfill_removes_stale_open_day_dir(spark, smoke_sf_dir):
-    """ADVICE r02 (medium): a day written OPEN by an earlier backfill cycle
+def test_rewrite_removes_stale_open_day_dir(spark, smoke_sf_dir):
+    """ADVICE r02 (medium): a day written OPEN by an earlier cycle
     keeps stale on-disk files when a later cycle's dedupe moves all its rows to
     a newer day — dynamic partition overwrite only replaces partitions present
     in the new batch. The fix deletes uncommitted day dirs before the write, so
@@ -180,11 +217,11 @@ def test_backfill_removes_stale_open_day_dir(spark, smoke_sf_dir):
     replayed = open_rows.withColumn("ts", F.col("ts") + F.expr("INTERVAL 3 DAYS"))
     with tempfile.TemporaryDirectory() as d:
         # cycle 1: max_day is the open day — written to disk, NOT committed
-        CK.backfill(spark, t, tool_dim, f"{d}/out", f"{d}/ck")
+        CK.run_incremental(spark, t, tool_dim, f"{d}/out", f"{d}/ck")
         # cycle 2: every open-day key re-pushed with newer ts on a later day —
         # the dedupe empties max_day, so its cycle-1 files are stale
         t2 = t.unionByName(replayed)
-        CK.backfill(spark, t2, tool_dim, f"{d}/out", f"{d}/ck")
+        CK.run_incremental(spark, t2, tool_dim, f"{d}/out", f"{d}/ck")
         lin = CK.Lineage(f"{d}/ck")
         by_day = {e["partition"]: e for e in lin.entries() if e.get("status") == "committed"}
         assert str(max_day) in by_day
@@ -218,7 +255,7 @@ def test_skipped_committed_rows_are_observable(spark, smoke_sf_dir):
 
 def test_fully_deduped_day_commits_empty(spark, smoke_sf_dir):
     """A day whose every (conv_id, turn_idx) key reappears with a NEWER ts in
-    a later day loses all rows to the dedupe; both entry points must commit it
+    a later day loses all rows to the dedupe; ingest must commit it
     (rows=0) instead of wedging, and the store must equal the deduped input."""
     t = io.load_transcripts(spark, smoke_sf_dir)
     tool_dim, _ = io.load_dims(spark, smoke_sf_dir)
@@ -227,22 +264,17 @@ def test_fully_deduped_day_commits_empty(spark, smoke_sf_dir):
     # replay every first-day row 3 days later (newer ts wins the dedupe)
     replayed = first_day.withColumn("ts", F.col("ts") + F.expr("INTERVAL 3 DAYS"))
     t2 = t.unionByName(replayed)
-    for mode in ("backfill", "loop"):
-        with tempfile.TemporaryDirectory() as d:
-            if mode == "backfill":
-                CK.backfill(spark, t2, tool_dim, f"{d}/out", f"{d}/ck")
-            else:
-                CK.run_incremental(spark, t2, tool_dim, f"{d}/out", f"{d}/ck")
-            lin = CK.Lineage(f"{d}/ck")
-            by_day = {e["partition"]: e for e in lin.entries()}
-            assert str(min_day) in by_day, mode
-            assert by_day[str(min_day)]["rows"] == 0, mode
-            got = CK.read_all_routed(spark, f"{d}/out").drop("day")
-            from ictspark import enrich, parse
-            from ictspark.io import dedupe_transcripts
+    with tempfile.TemporaryDirectory() as d:
+        CK.run_incremental(spark, t2, tool_dim, f"{d}/out", f"{d}/ck")
+        lin = CK.Lineage(f"{d}/ck")
+        by_day = {e["partition"]: e for e in lin.entries()}
+        assert str(min_day) in by_day
+        assert by_day[str(min_day)]["rows"] == 0
+        got = CK.read_all_routed(spark, f"{d}/out").drop("day")
+        from ictspark.io import dedupe_transcripts
 
-            exp = enrich.enrich_steps(parse.parse_steps(dedupe_transcripts(t2)), tool_dim)
-            assert got.count() == exp.count(), mode
+        exp = enrich.enrich_steps(parse.parse_steps(dedupe_transcripts(t2)), tool_dim)
+        assert got.count() == exp.count()
 
 
 def test_idle_poll_cycles_do_not_grow_journals(spark, smoke_sf_dir):

@@ -49,13 +49,13 @@ def test_snapshot_reconstruction_exact(spark, smoke_sf_dir):
 
 
 def test_append_only_range_has_no_replaces(spark, smoke_sf_dir):
-    """commit_open_day backfills are append-only: every snapshot in the range
+    """commit_open_day ingests are append-only: every snapshot in the range
     is an append and the appended files alone reproduce the whole store."""
     t = io.load_transcripts(spark, smoke_sf_dir)
     tool_dim, _ = io.load_dims(spark, smoke_sf_dir)
     with tempfile.TemporaryDirectory() as d:
         out, ck = f"{d}/out", f"{d}/ck"
-        CK.backfill(spark, t, tool_dim, out, ck, commit_open_day=True)
+        CK.run_incremental(spark, t, tool_dim, out, ck, commit_open_day=True)
         log = SN.SnapshotLog(ck)
         appended, replaced = SN.changes_since(spark, out, log, 0)
         assert replaced == []
