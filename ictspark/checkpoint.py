@@ -347,7 +347,7 @@ def read_all_routed(spark: SparkSession, out_dir: str) -> DataFrame:
     _record_skipped_committed); consumers needing strict one-copy semantics
     over a store with re-pushed history should apply io.dedupe_transcripts on
     read (it is the same newest-wins window)."""
-    return spark.read.option("basePath", out_dir).parquet(os.path.join(out_dir, "day=*"))
+    return spark.read.parquet(out_dir)
 
 
 def report_from_store(spark: SparkSession, out_dir: str) -> DataFrame:

@@ -11,8 +11,6 @@ Modes:
                write, then commits the closed days
   changes      snapshot-based incremental read (Iceberg commit-lineage analog):
                what did commits after --after add/replace? (consumer side)
-  yield-stream Structured Streaming run-grain yield: drain a transcripts file
-               stream via foreachBatch state merge, print the yield report
 
 On a cluster the same code runs unchanged: `--master` comes from spark-submit,
 and `ICTSPARK_FORMAT=iceberg` switches sinks to Iceberg tables (SURVEY §7 risk
@@ -202,23 +200,6 @@ def cmd_changes(args: argparse.Namespace) -> None:
     print(json.dumps(out))
 
 
-def cmd_yield_stream(args: argparse.Namespace) -> None:
-    from ictspark import streaming as ST
-    from ictspark.schema import TRANSCRIPTS
-
-    spark = _spark()
-    s = (
-        spark.readStream.schema(TRANSCRIPTS)
-        .option("maxFilesPerTrigger", args.max_files_per_trigger)
-        .parquet(args.transcripts)
-    )
-    state_dir = os.path.join(args.out, "yield_state")
-    ST.run_yield_state_loop(s, state_dir, args.checkpoint)
-    state = ST.read_yield_state(spark, state_dir)
-    rows = ST.yields_from_state(state).collect() if state is not None else []
-    print(json.dumps({"mode": "yield-stream", "yields": [r.asDict() for r in rows]}))
-
-
 def main(argv: list[str] | None = None) -> None:
     p = argparse.ArgumentParser(prog="ictspark-job")
     sub = p.add_subparsers(dest="mode", required=True)
@@ -243,12 +224,6 @@ def main(argv: list[str] | None = None) -> None:
     s.add_argument("--after", type=int, default=0)
     s.add_argument("--export", default=None)
     s.set_defaults(fn=cmd_changes)
-    s = sub.add_parser("yield-stream")
-    s.add_argument("--transcripts", required=True)
-    s.add_argument("--out", required=True)
-    s.add_argument("--checkpoint", required=True)
-    s.add_argument("--max-files-per-trigger", type=int, default=8)
-    s.set_defaults(fn=cmd_yield_stream)
     args = p.parse_args(argv)
     args.fn(args)
 

@@ -151,3 +151,25 @@ def test_reportset_barrier_truncates_lineage(rs):
     # hundreds of lines, plans/r10/yield_report_before.txt)
     y_plan = rs.yields()._jdf.queryExecution().optimizedPlan().toString()
     assert len(y_plan.splitlines()) < 120, len(y_plan.splitlines())
+
+
+def test_shuffle_partition_heuristic():
+    """Local = 1x cores (floor 16); cluster = 3x cores; env flag works."""
+    import os
+
+    from ictspark.session import shuffle_partitions_for
+
+    assert shuffle_partitions_for(32, cluster=False) == 32
+    assert shuffle_partitions_for(8, cluster=False) == 16  # floor
+    assert shuffle_partitions_for(32, cluster=True) == 96
+    old = os.environ.get("ICTSPARK_CLUSTER")
+    try:
+        os.environ["ICTSPARK_CLUSTER"] = "1"
+        assert shuffle_partitions_for(32) == 96
+        os.environ["ICTSPARK_CLUSTER"] = "0"
+        assert shuffle_partitions_for(32) == 32
+    finally:
+        if old is None:
+            os.environ.pop("ICTSPARK_CLUSTER", None)
+        else:
+            os.environ["ICTSPARK_CLUSTER"] = old
