@@ -48,14 +48,6 @@ def _q_parse_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q_route_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sa = _steps_a(spark, sf_dir)
-    tool_dim, _ = io.load_dims(spark, sf_dir)
-    return enrich.enrich_steps(sa, tool_dim).groupBy("route_key").agg(
-        F.count(F.lit(1)).alias("n")
-    )
-
-
 def _q_tool_call_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     tc = parse.parse_tool_calls(io.load_transcripts(spark, sf_dir))
     return tc.groupBy("called_tool").agg(F.count(F.lit(1)).alias("n_calls"))
@@ -130,10 +122,7 @@ def _q_hourly_labeled(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ictspark import functions as FN
 
     sa = _steps_a(spark, sf_dir)
-    h = A.runs(sa).groupBy(F.date_trunc("hour", "run_ts").alias("h")).agg(
-        F.sum(F.when(F.col("any_fail") == 0, 1).otherwise(0)).alias("ok"),
-        F.sum(F.when(F.col("any_fail") == 1, 1).otherwise(0)).alias("nok"),
-    )
+    h = A.runs(sa).groupBy(F.date_trunc("hour", "run_ts").alias("h")).agg(*A.ok_nok())
     return h.select(
         FN.hour_timeframe("h").alias("timeframe"),
         FN.hour_range("h").alias("hours"),
@@ -159,6 +148,13 @@ def _q_step_units(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _wrap(fn: Callable[[DataFrame], DataFrame]) -> Callable[[SparkSession, str], DataFrame]:
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
         return fn(_steps_a(spark, sf_dir))
+
+    return q
+
+
+def _wrap_runs(fn: Callable[[DataFrame], DataFrame]) -> Callable[[SparkSession, str], DataFrame]:
+    def q(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return fn(A.runs(_steps_a(spark, sf_dir)))
 
     return q
 
@@ -285,7 +281,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ann_quantized_rerank": _q_emb(similarity.ann_quantized_rerank),
         "embedding_norm_stats": _q_emb(similarity.embedding_norm_stats),
         "media_dedup": _q_media(multimodal.media_dedup),
-        "mb_result_boxes": _wrap(A.mb_result_boxes),
+        "mb_result_boxes": _wrap_runs(A.mb_result_boxes),
         "events_hourly": DT.events_hourly,
         "events_shift_buckets": DT.events_shift_buckets,
         # --- two green rounds (r01-r02 tail residents) ---
@@ -303,9 +299,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "hourly_labeled": _q_hourly_labeled,
         "step_units": _q_step_units,
         # --- thrice green, displaced in r04 (VERDICT r04 item 5 return) ---
-        "hourly_detail": _wrap(A.hourly_detail),
-        "hourly_totals": _wrap(A.hourly_totals),
-        "daily_report": _wrap(A.daily_report),
+        "hourly_detail": _wrap_runs(A.hourly_detail),
+        "hourly_totals": _wrap_runs(A.hourly_totals),
+        "daily_report": _wrap_runs(A.daily_report),
         "limit_change_points": _wrap(A.limit_change_points),
         "testlist": _wrap(A.testlist),
         "step_value_stats": _wrap(A.step_value_stats),
@@ -323,21 +319,23 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "failure_counts": _wrap(A.failure_counts),
         "failure_detail": _wrap(A.failure_detail),
         "failures_by_index": _wrap(A.failures_by_index),
-        "hourly_stats": _wrap(A.hourly_stats),
-        "mb_results": _wrap(A.mb_results),
-        "mb_positions": _wrap(A.mb_positions),
+        "hourly_stats": _wrap_runs(A.hourly_stats),
+        "mb_results": _wrap_runs(A.mb_results),
+        "mb_positions": _wrap_runs(A.mb_positions),
         "step_series": _wrap(A.step_series),
         "step_histogram": _wrap(A.step_histogram),
         "step_cpk_trend": _wrap(A.step_cpk_trend),
         "limit_changes": _wrap(A.limit_changes),
-        "failed_boards": _wrap(A.failed_boards),
+        "failed_boards": _wrap(
+            lambda sa: A.failed_boards(A.runs(sa), sa.where(F.col("status") != "pass"))
+        ),
         "failed_boards_display": _wrap(PR.failed_boards_display),
         "product_hourly": _wrap_enriched(PR.product_hourly),
         "product_daily_failures": _wrap_enriched(PR.product_daily_failures),
         "product_failed_boards": _wrap_enriched(PR.product_failed_boards),
         "retest_counts": _wrap(A.retest_counts),
         "first_fail": _wrap(A.first_fail),
-        "route_counts": _q_route_counts,
+        "route_counts": _wrap_enriched(enrich.route_counts),
         # --- training-data extras: text / dedup / curation ---
         "ngram_jaccard_pairs": _q_docs(dedup.ngram_jaccard_pairs),
         "minhash_lsh_pairs": _q_docs(dedup.minhash_lsh_pairs),

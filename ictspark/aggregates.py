@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ictspark import functions as FN
+
 TS_FMT = "yyyy-MM-dd HH:mm:ss"
 
 def fmt_ts(col: str, alias: str | None = None) -> F.Column:
@@ -67,23 +69,6 @@ def conv_final(steps_a: DataFrame) -> DataFrame:
     )
 
 
-def run_grain(steps_a: DataFrame) -> DataFrame:
-    """Per (session, conv, attempt): run result + final-fail contribution.
-
-    This is the natural materialization grain (the reference's per-logfile
-    record): ONE map-side-combinable aggregation over steps feeds every yield
-    grain. Hot conv_ids are defused by the partial aggregation — a 100k-step
-    conv collapses to ≤ max_attempt rows per input partition before the
-    shuffle, so no salting is needed here.
-    """
-    return steps_a.groupBy("session_id", "conv_id", "attempt").agg(
-        F.max(F.when(F.col("status") != "pass", 1).otherwise(0)).alias("any_fail"),
-        F.max(F.when(F.col("is_last") & (F.col("status") != "pass"), 1).otherwise(0)).alias(
-            "final_fail"
-        ),
-    )
-
-
 def _stack3(df: DataFrame, level: str, triples: list[tuple[str, str, str]]) -> DataFrame:
     """One-row df with ok_X/nok_X columns → rows (level, grain, ok, nok)."""
     expr = ", ".join(f"'{g}', ok_{k}, nok_{k}" for g, k, _ in triples)
@@ -92,40 +77,23 @@ def _stack3(df: DataFrame, level: str, triples: list[tuple[str, str, str]]) -> D
     )
 
 
-def yields(steps_a: DataFrame, materialize: bool = True) -> DataFrame:
+def yields(steps_a: DataFrame) -> DataFrame:
     """A1 + A2: OK/NOK/pct at {conv, session} × {first, after_retest, total}.
 
     Reference grain mapping: labels FirstT/AfterRT/Total at main.rs:713-715
     reading Yield[0]/[1]/[2] at main.rs:727-729.
 
-    Plan shape: steps → run_grain (cached: three downstream grains reuse it
-    without recompute; at production scale this is the persisted `runs` table,
-    which ReportSet manages — that path calls yields_from_run_grain directly)
-    → conv grain → tiny global rollups. materialize=False skips the cache
-    (used by the scaling bench to keep per-run work constant, and by the plan
-    audit, which wants the full lazy plan).
-
-    Cache lifecycle (r04, VERDICT r03 item 3): materialize=True computes the
-    ≤8-row report eagerly while the run_grain cache is alive, UNPERSISTS it,
-    and returns the tiny result as a local DataFrame — a standalone call can
-    no longer leak one cached run-grain frame per invocation into the session
-    (the same class of driver-small materialization as job.py's final yield
-    collect)."""
-    ca = run_grain(steps_a)
-    if not materialize:
-        return yields_from_run_grain(ca)
-    ca = ca.persist()
-    try:
-        out = yields_from_run_grain(ca)
-        rows = out.collect()  # ≤ 8 rows: the global yield rollup
-        return steps_a.sparkSession.createDataFrame(rows, out.schema)
-    finally:
-        ca.unpersist()
+    Plan shape: steps → the `runs` grain (one map-side-combinable aggregation
+    whose shuffle its three consumers share as a ReusedExchange — no cache, so
+    a standalone call leaves nothing persisted) → conv grain → tiny global
+    rollups. ReportSet, which holds `runs` as a
+    barrier, calls yields_from_run_grain directly."""
+    return yields_from_run_grain(runs(steps_a))
 
 
 def yields_from_run_grain(ca: DataFrame) -> DataFrame:
-    """Yield grains from an (already materialized) run-grain table — any df
-    with (session_id, conv_id, attempt, any_fail, final_fail)."""
+    """Yield grains from a run-grain table — any df with (session_id,
+    conv_id, attempt, any_fail, final_fail), e.g. runs()."""
     conv = ca.groupBy("session_id", "conv_id").agg(
         F.max(F.when(F.col("attempt") == 1, F.col("any_fail"))).alias("first_fail"),
         F.max("final_fail").alias("final_fail"),
@@ -167,7 +135,7 @@ def yields_from_run_grain(ca: DataFrame) -> DataFrame:
         .unionByName(_stack3(sess_row, "session", grains[:2]))
         .unionByName(_stack3(sess_total_row, "session", grains[2:]))
     )
-    return out.withColumn("pct", F.round(100.0 * F.col("ok") / (F.col("ok") + F.col("nok")), 2))
+    return out.withColumn("pct", FN.percentage(F.col("ok"), F.col("nok")))
 
 
 def _fail_modes(steps_a: DataFrame) -> DataFrame:
@@ -196,22 +164,25 @@ def failures_by_index(steps_a: DataFrame) -> DataFrame:
     )
 
 
-def hourly_stats(steps_a: DataFrame) -> DataFrame:
+def ok_nok() -> list[F.Column]:
+    """ok/nok run counts over a run grain's any_fail flag — the one definition
+    behind every hourly, daily and per-product ok/nok table."""
+    return [
+        F.sum(F.when(F.col("any_fail") == 0, 1).otherwise(0)).alias("ok"),
+        F.sum(F.when(F.col("any_fail") == 1, 1).otherwise(0)).alias("nok"),
+    ]
+
+
+def hourly_stats(runs: DataFrame) -> DataFrame:
     """A4: per hour bucket of run start: ok/nok run counts."""
-    r = runs(steps_a)
-    return (
-        r.groupBy(F.date_format(F.date_trunc("hour", "run_ts"), TS_FMT).alias("hour"))
-        .agg(
-            F.sum(F.when(F.col("any_fail") == 0, 1).otherwise(0)).alias("ok"),
-            F.sum(F.when(F.col("any_fail") == 1, 1).otherwise(0)).alias("nok"),
-        )
-    )
+    return runs.groupBy(
+        F.date_format(F.date_trunc("hour", "run_ts"), TS_FMT).alias("hour")
+    ).agg(*ok_nok())
 
 
-def hourly_detail(steps_a: DataFrame) -> DataFrame:
+def hourly_detail(runs: DataFrame) -> DataFrame:
     """A4 detail rows (time-ordered list equivalent, exploded)."""
-    r = runs(steps_a)
-    return r.select(
+    return runs.select(
         F.date_format(F.date_trunc("hour", "run_ts"), TS_FMT).alias("hour"),
         fmt_ts("run_ts", "run_ts"),
         "result",
@@ -219,19 +190,18 @@ def hourly_detail(steps_a: DataFrame) -> DataFrame:
     )
 
 
-def hourly_totals(steps_a: DataFrame) -> DataFrame:
+def hourly_totals(runs: DataFrame) -> DataFrame:
     """A9: hourly rollup with grand-total row (daily_yield.rs:100-115)."""
-    h = hourly_stats(steps_a)
+    h = hourly_stats(runs)
     return h.rollup("hour").agg(F.sum("ok").alias("ok"), F.sum("nok").alias("nok")).withColumn(
         "hour", F.coalesce("hour", F.lit("TOTAL"))
     )
 
 
-def mb_results(steps_a: DataFrame) -> DataFrame:
+def mb_results(runs: DataFrame) -> DataFrame:
     """A5: per (session, attempt): start ts + overall result (main.rs:1195-1264)."""
-    r = runs(steps_a)
     return (
-        r.groupBy("session_id", "attempt")
+        runs.groupBy("session_id", "attempt")
         .agg(
             F.date_format(F.min("run_ts"), TS_FMT).alias("run_ts"),
             F.max("any_fail").alias("any_fail"),
@@ -241,10 +211,9 @@ def mb_results(steps_a: DataFrame) -> DataFrame:
     )
 
 
-def mb_positions(steps_a: DataFrame) -> DataFrame:
+def mb_positions(runs: DataFrame) -> DataFrame:
     """A5 per-position detail: (session, attempt, board_idx, result) (main.rs:1248)."""
-    r = runs(steps_a)
-    return r.select("session_id", "attempt", "board_idx", "result")
+    return runs.select("session_id", "attempt", "board_idx", "result")
 
 
 def limit_changes(steps_a: DataFrame) -> DataFrame:
@@ -262,19 +231,16 @@ def testlist(steps_a: DataFrame) -> DataFrame:
     return steps_a.select("step").distinct().orderBy("step")
 
 
-def failed_boards(steps_a: DataFrame) -> DataFrame:
-    """A8: failing runs with joined failed-step names (daily_yield.rs:146-165)."""
-    per_run = steps_a.groupBy("conv_id", "attempt").agg(
-        F.min("ts").alias("run_ts"),
-        F.max(F.when(F.col("status") != "pass", 1).otherwise(0)).alias("any_fail"),
-        F.array_join(
-            F.array_sort(F.collect_set(F.when(F.col("status") != "pass", F.col("step")))),
-            ", ",
-        ).alias("failed_steps"),
+def failed_boards(runs: DataFrame, fails: DataFrame) -> DataFrame:
+    """A8: failing runs with joined failed-step names (daily_yield.rs:146-165):
+    the sorted step list aggregates the failing executions only, and the run
+    start comes from the run grain."""
+    per_run = fails.groupBy("conv_id", "attempt").agg(
+        F.array_join(F.array_sort(F.collect_set("step")), ", ").alias("failed_steps")
     )
-    return per_run.where("any_fail = 1").select(
-        "conv_id", "attempt", fmt_ts("run_ts", "run_ts"), "failed_steps"
-    )
+    return per_run.join(
+        runs.select("conv_id", "attempt", fmt_ts("run_ts", "run_ts")), ["conv_id", "attempt"]
+    ).select("conv_id", "attempt", "run_ts", "failed_steps")
 
 
 def retest_counts(steps_a: DataFrame) -> DataFrame:
@@ -309,6 +275,11 @@ def export_matrix(steps_a: DataFrame, steps: list[str] | None = None, only_faile
     if only_failed:
         bad = conv_final(steps_a).where("any_fail = 1").select("conv_id")
         base = base.join(bad, "conv_id", "left_semi")
+    return _pivot_steps(base, steps)
+
+
+def _pivot_steps(base: DataFrame, steps: list[str]) -> DataFrame:
+    """One row per conv, one val_<step> column per selected step."""
     p = base.groupBy("conv_id").pivot("step", steps).agg(F.max("value"))
     for s in steps:
         safe = "val_" + "".join(c if c.isalnum() else "_" for c in s.lower())
@@ -350,18 +321,14 @@ def limit_change_points(steps_a: DataFrame) -> DataFrame:
     )
 
 
-def daily_report(steps_a: DataFrame) -> DataFrame:
+def daily_report(runs: DataFrame) -> DataFrame:
     """Daily yield report day buckets: [D 06:00, D+1 06:00) per
     daily_yield.rs:203-214 — per shifted day: ok/nok runs + pct."""
-    r = runs(steps_a)
     day = F.date_format(F.col("run_ts") - F.expr("INTERVAL 6 HOURS"), "yyyy-MM-dd")
     return (
-        r.groupBy(day.alias("report_day"))
-        .agg(
-            F.sum(F.when(F.col("any_fail") == 0, 1).otherwise(0)).alias("ok"),
-            F.sum(F.when(F.col("any_fail") == 1, 1).otherwise(0)).alias("nok"),
-        )
-        .withColumn("pct", F.round(100.0 * F.col("ok") / (F.col("ok") + F.col("nok")), 2))
+        runs.groupBy(day.alias("report_day"))
+        .agg(*ok_nok())
+        .withColumn("pct", FN.percentage(F.col("ok"), F.col("nok")))
     )
 
 
@@ -449,18 +416,17 @@ def step_histogram(steps_a: DataFrame, n_bins: int = 10) -> DataFrame:
     )
 
 
-def mb_result_boxes(steps_a: DataFrame) -> DataFrame:
+def mb_result_boxes(runs: DataFrame) -> DataFrame:
     """The multiboard result-box row (draw_result_box, main.rs:1248,1390-1403):
     per (session, attempt) one row with the per-position results laid out in
     board_idx order as 'idx:result' cells — the panel strip the reference
     paints, as data."""
-    r = runs(steps_a)
     cells = F.transform(
         F.array_sort(F.collect_list(F.struct("board_idx", "result"))),
         lambda s: F.concat_ws(":", s["board_idx"].cast("string"), s["result"]),
     )
     return (
-        r.groupBy("session_id", "attempt")
+        runs.groupBy("session_id", "attempt")
         .agg(
             F.date_format(F.min("run_ts"), TS_FMT).alias("run_ts"),
             F.array_join(cells, " ").alias("boxes"),
@@ -655,12 +621,7 @@ def export_matrix_final_run(steps_a: DataFrame, steps: list[str] | None = None) 
     final_run = steps_a.withColumn("max_attempt", F.max("attempt").over(w)).where(
         F.col("attempt") == F.col("max_attempt")
     )
-    base = final_run.where(F.col("step").isin(steps))
-    p = base.groupBy("conv_id").pivot("step", steps).agg(F.max("value"))
-    for s in steps:
-        safe = "val_" + "".join(c if c.isalnum() else "_" for c in s.lower())
-        p = p.withColumnRenamed(s, safe)
-    return p
+    return _pivot_steps(final_run.where(F.col("step").isin(steps)), steps)
 
 
 def tool_chain_stats(transcripts: DataFrame) -> DataFrame:

@@ -78,22 +78,7 @@ class Lineage:
         return committed_partitions(self.entries())
 
     def append(self, rec: dict) -> None:
-        line = (json.dumps(rec) + "\n").encode()
-        # torn-tail heal: appending straight after a newline-less torn line
-        # would glue this record onto it and lose both to the parser (one
-        # extra idempotent reprocess cycle for lineage; snapshot-id reuse for
-        # the snapshot journal — so both journals heal the same way)
-        if os.path.exists(self.path) and os.path.getsize(self.path) > 0:
-            with open(self.path, "rb") as f:
-                f.seek(-1, os.SEEK_END)
-                if f.read(1) != b"\n":
-                    line = b"\n" + line
-        fd = os.open(self.path, os.O_WRONLY | os.O_APPEND | os.O_CREAT, 0o644)
-        try:
-            os.write(fd, line)
-            os.fsync(fd)
-        finally:
-            os.close(fd)
+        append_jsonl(self.path, rec)
 
     def commit(self, partition: str, **metrics) -> None:
         self.append({"partition": partition, "status": "committed", "at": time.time(), **metrics})
@@ -102,6 +87,28 @@ class Lineage:
         """Record a write of the still-open partition (NOT a commit — it will
         be rewritten next cycle)."""
         self.append({"partition": partition, "status": "open", "at": time.time(), **metrics})
+
+
+def append_jsonl(path: str, rec: dict) -> None:
+    """Append one JSON line to a journal (O_APPEND + fsync) — the one appender
+    behind the lineage log and the snapshot journal."""
+    line = (json.dumps(rec) + "\n").encode()
+    # torn-tail heal: appending straight after a newline-less torn line
+    # would glue this record onto it and lose both to the parser (one
+    # extra idempotent reprocess cycle for lineage; snapshot-id reuse for
+    # the snapshot journal). A leading newline turns the torn bytes into
+    # their own (skipped) line and keeps this one intact.
+    if os.path.exists(path) and os.path.getsize(path) > 0:
+        with open(path, "rb") as f:
+            f.seek(-1, os.SEEK_END)
+            if f.read(1) != b"\n":
+                line = b"\n" + line
+    fd = os.open(path, os.O_WRONLY | os.O_APPEND | os.O_CREAT, 0o644)
+    try:
+        os.write(fd, line)
+        os.fsync(fd)
+    finally:
+        os.close(fd)
 
 
 def committed_partitions(entries: list[dict]) -> set[str]:

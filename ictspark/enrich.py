@@ -1,6 +1,6 @@
-"""Enrich stage (SURVEY.md J2): broadcast hash-join against the lookup dims.
+"""Enrich stage (SURVEY.md J2): broadcast hash-join against the tool dim.
 
-tool_dim / role_dim are tiny (≤ dozens of rows) at any scale — the reference's
+tool_dim is tiny (≤ dozens of rows) at any scale — the reference's
 `Product` config lookup (/root/reference/src/main.rs:526,628). `F.broadcast`
 pins BroadcastHashJoin so the 100 TB fact side never shuffles for the enrich.
 Unmatched tools route to 'misc' (SEMANTICS.md Routing).
@@ -18,8 +18,6 @@ def enrich_steps(steps: DataFrame, tool_dim: DataFrame) -> DataFrame:
     )
 
 
-def enrich_turns(transcripts: DataFrame, tool_dim: DataFrame, role_dim: DataFrame) -> DataFrame:
-    out = transcripts.join(F.broadcast(tool_dim), "tool", "left").join(
-        F.broadcast(role_dim), "role", "left"
-    )
-    return out.withColumn("route_key", F.coalesce("route_key", F.lit("misc")))
+def route_counts(es_a: DataFrame) -> DataFrame:
+    """Enriched step rows per route sink."""
+    return es_a.groupBy("route_key").agg(F.count(F.lit(1)).alias("n"))

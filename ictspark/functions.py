@@ -1,4 +1,4 @@
-"""Scalar presentation functions (SURVEY §2.8 C1-C3, C7-C9) — the reference's
+"""Scalar presentation functions (SURVEY §2.8 C1, C2, C7) — the reference's
 u64 time decoders re-expressed as date_format/format_string over one internal
 TimestampType (SURVEY §1.1 "Time": single encoding internally, presentation at
 the edge)."""
@@ -24,21 +24,6 @@ def hour_range(ts: Column | str) -> Column:
     return F.format_string("%s:00 - %s:59", F.date_format(ts, "HH"), F.date_format(ts, "HH"))
 
 
-def display_time(ts: Column | str) -> Column:
-    """C3: u64_to_string analog — 'yy.MM.dd HH:mm:ss' (main.rs:885,1241)."""
-    return F.date_format(ts, "yy.MM.dd HH:mm:ss")
-
-
 def percentage(ok: Column, nok: Column) -> Column:
     """C7: Yield::precentage, 2 dp (main.rs:745-747)."""
     return F.round(100.0 * ok / (ok + nok), 2)
-
-
-def join_names(arr: Column) -> Column:
-    """C8: ', '-joined sorted names (daily_yield.rs:163)."""
-    return F.array_join(F.array_sort(arr), ", ")
-
-
-def split_manual_list(s: str) -> list[str]:
-    """C9: space-split manual export list ('c613 r412 v605%ON', locals.rs:66)."""
-    return [x for x in s.split(" ") if x]

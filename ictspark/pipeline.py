@@ -15,7 +15,7 @@ of re-running parse + windows per report.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ictspark import aggregates as A
@@ -44,26 +44,12 @@ class ReportSet:
         return A.yields_from_run_grain(self.runs)
 
     def hourly_stats(self) -> DataFrame:
-        r = self.runs
-        return r.groupBy(
-            F.date_format(F.date_trunc("hour", "run_ts"), A.TS_FMT).alias("hour")
-        ).agg(
-            F.sum(F.when(F.col("any_fail") == 0, 1).otherwise(0)).alias("ok"),
-            F.sum(F.when(F.col("any_fail") == 1, 1).otherwise(0)).alias("nok"),
-        )
+        return A.hourly_stats(self.runs)
 
     def mb_results(self) -> DataFrame:
-        return (
-            self.runs.groupBy("session_id", "attempt")
-            .agg(
-                F.date_format(F.min("run_ts"), A.TS_FMT).alias("run_ts"),
-                F.max("any_fail").alias("any_fail"),
-            )
-            .withColumn("result", F.when(F.col("any_fail") == 1, "fail").otherwise("pass"))
-            .drop("any_fail")
-        )
+        return A.mb_results(self.runs)
 
-    # --- reports over `fails` (small) ---
+    # --- reports over `fails` (small); failed_boards also reads `runs` ---
 
     def failure_counts(self) -> DataFrame:
         return A.failure_counts(self.fails)
@@ -75,13 +61,7 @@ class ReportSet:
         return A.first_fail(self.fails)
 
     def failed_boards(self) -> DataFrame:
-        per_run = self.fails.groupBy("conv_id", "attempt").agg(
-            F.array_join(F.array_sort(F.collect_set("step")), ", ").alias("failed_steps")
-        )
-        return per_run.join(
-            self.runs.select("conv_id", "attempt", F.date_format("run_ts", A.TS_FMT).alias("run_ts")),
-            ["conv_id", "attempt"],
-        ).select("conv_id", "attempt", "run_ts", "failed_steps")
+        return A.failed_boards(self.runs, self.fails)
 
     # --- reports over `steps_a` ---
 
@@ -89,9 +69,7 @@ class ReportSet:
         return A.limit_changes(self.steps_a)
 
     def route_counts(self) -> DataFrame:
-        return enrich.enrich_steps(self.steps_a, self.tool_dim).groupBy("route_key").agg(
-            F.count(F.lit(1)).alias("n")
-        )
+        return enrich.route_counts(self.enriched())
 
     def enriched(self) -> DataFrame:
         return enrich.enrich_steps(self.steps_a, self.tool_dim)

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ictspark.aggregates import TS_FMT, fmt_ts
+from ictspark.aggregates import TS_FMT, fmt_ts, ok_nok
 
 
 def _fail() -> F.Column:
@@ -64,10 +64,7 @@ def product_hourly(es_a: DataFrame, runs: DataFrame | None = None) -> DataFrame:
     h = r.groupBy(
         "route_key",
         F.date_format(F.date_trunc("hour", "run_ts"), TS_FMT).alias("hour"),
-    ).agg(
-        F.sum(1 - F.col("any_fail")).alias("ok"),
-        F.sum("any_fail").alias("nok"),
-    )
+    ).agg(*ok_nok())
     tot = (
         h.groupBy("route_key")
         .agg(F.sum("ok").alias("ok"), F.sum("nok").alias("nok"))
@@ -110,11 +107,16 @@ def product_failed_boards(es_a: DataFrame, runs: DataFrame | None = None) -> Dat
     without any global ordered window).
 
     ``runs``: optional shared product_runs table (see product_hourly)."""
-    r = product_runs(es_a) if runs is None else runs
-    conv_any = F.max("any_fail").over(Window.partitionBy("route_key", "conv_id"))
-    d = r.withColumn("conv_any_fail", conv_any).where("conv_any_fail = 1")
+    return _failed_boards_detail(product_runs(es_a) if runs is None else runs, "route_key")
+
+
+def _failed_boards_detail(per_run: DataFrame, *keys: str) -> DataFrame:
+    """Every run of each ever-failing conv (per ``keys`` view), DMC blanked on
+    the conv's repeat rows (daily_yield.rs:154-158)."""
+    conv_any = F.max("any_fail").over(Window.partitionBy(*keys, "conv_id"))
+    d = per_run.withColumn("conv_any_fail", conv_any).where("conv_any_fail = 1")
     return d.select(
-        "route_key",
+        *keys,
         F.when(F.col("attempt") == 1, F.col("conv_id")).otherwise(F.lit("")).alias("dmc_display"),
         "attempt",
         fmt_ts("run_ts", "run_ts"),
@@ -173,13 +175,4 @@ def failed_boards_display(steps_a: DataFrame) -> DataFrame:
     """Global (non-product-scoped) A8 display variant of failed_boards: all
     runs of ever-failing convs, DMC blanked on repeat rows
     (daily_yield.rs:154-158)."""
-    per_run = _per_run(steps_a)
-    conv_any = F.max("any_fail").over(Window.partitionBy("conv_id"))
-    d = per_run.withColumn("conv_any_fail", conv_any).where("conv_any_fail = 1")
-    return d.select(
-        F.when(F.col("attempt") == 1, F.col("conv_id")).otherwise(F.lit("")).alias("dmc_display"),
-        "attempt",
-        fmt_ts("run_ts", "run_ts"),
-        F.when(F.col("any_fail") == 1, "fail").otherwise("pass").alias("result"),
-        "failed_steps",
-    )
+    return _failed_boards_detail(_per_run(steps_a))

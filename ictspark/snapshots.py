@@ -35,10 +35,12 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ictspark.checkpoint import append_jsonl
+
 
 class SnapshotLog:
-    """Append-only snapshot journal (same O_APPEND + fsync discipline as
-    checkpoint.Lineage; a torn final line is skipped — its write simply
+    """Append-only snapshot journal (written through checkpoint.append_jsonl,
+    like checkpoint.Lineage; a torn final line is skipped — its write simply
     re-records on retry, and ids stay monotonic)."""
 
     def __init__(self, ck_dir: str) -> None:
@@ -95,23 +97,7 @@ class SnapshotLog:
             "added_files": files,
             "at": time.time(),
         }
-        line = (json.dumps(rec) + "\n").encode()
-        # heal a torn tail BEFORE appending: a crash mid-append can leave the
-        # journal without a trailing newline, and appending directly would
-        # glue the new record onto the partial line — losing BOTH to the
-        # parser (and re-issuing this snapshot_id). A leading newline turns
-        # the torn bytes into their own (skipped) line and keeps ours intact.
-        if os.path.exists(self.path) and os.path.getsize(self.path) > 0:
-            with open(self.path, "rb") as f:
-                f.seek(-1, os.SEEK_END)
-                if f.read(1) != b"\n":
-                    line = b"\n" + line
-        fd = os.open(self.path, os.O_WRONLY | os.O_APPEND | os.O_CREAT, 0o644)
-        try:
-            os.write(fd, line)
-            os.fsync(fd)
-        finally:
-            os.close(fd)
+        append_jsonl(self.path, rec)  # heals a torn tail before appending
         # current_id() above primed the cache; account for our own append so
         # the next entries() doesn't double-read it. Resync the offset to EOF:
         # it may have been sitting BEFORE an unconsumed torn tail, which our

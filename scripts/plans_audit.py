@@ -62,14 +62,14 @@ def main() -> None:
     )
     add(
         "Yield report (A1/A2)",
-        A.yields(sa, materialize=False),
-        "steps → one Exchange(conv,step) for the attempt windows → run_grain partial+final "
+        A.yields(sa),
+        "steps → one Exchange(conv,step) for the attempt windows → runs partial+final "
         "agg → tiny conv/session rollups; all aggregates are algebraic so map-side combine "
         "defuses hot conv_ids before every shuffle.",
     )
     add(
         "Hourly stats (A4)",
-        A.hourly_stats(sa),
+        A.hourly_stats(A.runs(sa)),
         "Two-level agg with partial aggregation before each Exchange.",
     )
 

@@ -157,25 +157,40 @@ def test_open_day_late_arrivals(spark, smoke_sf_dir):
         assert got.select(*exp.columns).exceptAll(exp).count() == 0
 
 
-def test_lineage_tolerates_torn_tail(spark, smoke_sf_dir):
-    """A crash mid-append can tear the final lineage line; recovery must skip
-    it (the torn commit reprocesses idempotently) instead of failing forever."""
+@pytest.mark.parametrize("journal", ["lineage", "snapshots"])
+def test_lineage_tolerates_torn_tail(spark, smoke_sf_dir, journal):
+    """A crash mid-append can tear the final line of either journal (the
+    lineage log or the snapshot journal); recovery must skip it (the torn
+    commit reprocesses idempotently) instead of failing forever."""
+    from ictspark.snapshots import SnapshotLog
+
     t = io.load_transcripts(spark, smoke_sf_dir)
     tool_dim, _ = io.load_dims(spark, smoke_sf_dir)
     with tempfile.TemporaryDirectory() as d:
-        first = CK.run_incremental(spark, t, tool_dim, f"{d}/out", f"{d}/ck")
-        lin = CK.Lineage(f"{d}/ck")
-        n_committed = len(lin.committed())
-        with open(lin.path, "a") as f:
+        CK.run_incremental(spark, t, tool_dim, f"{d}/out", f"{d}/ck")
+        lin, snaps = CK.Lineage(f"{d}/ck"), SnapshotLog(f"{d}/ck")
+        n_committed, n_snaps = len(lin.committed()), len(snaps.entries())
+        top = snaps.current_id()
+        with open(lin.path if journal == "lineage" else snaps.path, "a") as f:
             f.write('{"partition": "2024-99-99", "status": "comm')  # torn line
         assert len(lin.committed()) == n_committed  # torn line skipped
+        assert len(snaps.entries()) == n_snaps
         again = CK.run_incremental(spark, t, tool_dim, f"{d}/out", f"{d}/ck")
         assert again == []  # resume works; idle open day skipped (r03)
         # the append-side heal: a record written AFTER the torn tail must not
         # glue onto it — both must stay parseable/skipped independently
-        lin.append({"partition": "x", "status": "open", "at": 0.0, "rows": 0,
-                    "duration_s": 0.0, "mode": "t", "input_rows": 0, "input_sig": 0})
-        assert any(e.get("partition") == "x" for e in lin.entries())
+        if journal == "lineage":
+            lin.append({"partition": "x", "status": "open", "at": 0.0, "rows": 0,
+                        "duration_s": 0.0, "mode": "t", "input_rows": 0, "input_sig": 0})
+            assert any(e.get("partition") == "x" for e in lin.entries())
+        else:
+            sid = snaps.record("x", [], "append")
+            assert sid == top + 1
+            # the writer's offset resyncs past the healed tail (no re-read),
+            # and a fresh reader parses the new record too
+            assert [e["snapshot_id"] for e in snaps.entries()][-1] == sid
+            assert len(snaps.entries()) == n_snaps + 1
+            assert SnapshotLog(f"{d}/ck").entries()[-1]["partition"] == "x"
 
 
 def test_cold_start_equals_cold_and_continues(spark, smoke_sf_dir):

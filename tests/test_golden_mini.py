@@ -58,7 +58,7 @@ def test_first_fail_exact(mini):
 
 
 def test_hourly_exact(mini):
-    h = {r["hour"]: (r["ok"], r["nok"]) for r in A.hourly_stats(mini).collect()}
+    h = {r["hour"]: (r["ok"], r["nok"]) for r in A.hourly_stats(A.runs(mini)).collect()}
     # run1 of c01 starts 10:01 (fail); run2 starts 11:30 (pass);
     # c02 run1 starts 10:05 (pass), run2 10:05 (pass)
     assert h["2024-03-01 10:00:00"] == (2, 1)

@@ -13,7 +13,7 @@ def _steps_a(spark, sf_dir):
 
 def test_hourly_sums_to_total_yield(spark, smoke_sf_dir):
     sa = _steps_a(spark, smoke_sf_dir)
-    h = A.hourly_stats(sa).agg(F.sum("ok").alias("ok"), F.sum("nok").alias("nok")).first()
+    h = A.hourly_stats(A.runs(sa)).agg(F.sum("ok").alias("ok"), F.sum("nok").alias("nok")).first()
     y = A.yields(sa).where("level = 'conv' and grain = 'total'").first()
     assert (h["ok"], h["nok"]) == (y["ok"], y["nok"])
 

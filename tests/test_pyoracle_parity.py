@@ -45,7 +45,7 @@ def test_failure_counts(golden, steps_a):
 
 
 def test_hourly(golden, steps_a):
-    rows = {r["hour"]: (r["ok"], r["nok"]) for r in A.hourly_stats(steps_a).collect()}
+    rows = {r["hour"]: (r["ok"], r["nok"]) for r in A.hourly_stats(A.runs(steps_a)).collect()}
     assert rows == golden["hourly"]
 
 
